@@ -43,8 +43,8 @@ into the retraction cost consciously.
 The view itself is stored as a versioned table, so MV readers get the same
 snapshot isolation / time travel as base-table readers, and every refresh is
 an atomic commit. Refreshes commit ``kind='merge'`` with REAL change files
-(insert / update pre+postimage / delete per changed group, derived from the
-same merge join by ``_mv_change_rows`` — O(changed groups)), which makes a
+(insert / update pre+postimage / delete per changed group, staged from the
+same merge join by ``_stage_mv_refresh`` — O(changed groups)), which makes a
 maintained view itself a change-feed SOURCE: another MV (or a join MV using
 it as the dim side) can chain off it, and base movement propagates down the
 chain with every hop O(changes). See test_mv_chain_mv_over_mv and
@@ -66,13 +66,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .versioned import (
-    _FUSED_RESERVED,
+    _CHANGE_TYPE,
     _commit,
     _count_staged,
-    _fused_staging_enabled,
     _read_manifest,
-    _stage_data_files,
-    _stage_tagged_files,
+    _refuse_role_columns,
+    _role,
+    _stage_files,
     current_version,
     read_snapshot,
     write_snapshot,
@@ -257,6 +257,7 @@ def _change_feed(
     the delta of a full replace is simply not expressible as change rows,
     the view must be rebuilt. Reads only files belonging to versions in the
     window — the O(changes) property."""
+    _refuse_role_columns(columns)
     inserts: list[str] = []
     physical: list[str] = []
     for v in range(lo + 1, hi + 1):
@@ -294,81 +295,40 @@ def _change_feed(
     return out
 
 
-def _mv_change_rows(
-    full: DataFrame, keys: list[str], measures: list[str]
-) -> DataFrame:
-    """Derive the refresh's OWN change feed from the annotated merge frame
-    (``_in_cur``/``_in_delta`` presence markers + ``_pre_*`` prior values):
-    inserts (group is new), update pre/postimage pairs (group existed and a
-    measure actually moved), deletes (maintained count reached 0). Same CDF
-    shape as merge_snapshot, O(changed groups) rows — this is what makes a
-    maintained view itself consumable by ANOTHER maintained view."""
-    alive = F.col("mv_count") > 0
-    in_cur, in_delta = F.col("_in_cur"), F.col("_in_delta")
-    changed = F.lit(False)
-    for m in measures:
-        changed = changed | ~F.col(m).eqNullSafe(F.col(f"_pre_{m}"))
-    pre = [F.col(f"_pre_{m}").alias(m) for m in measures]
-    post = [F.col(m) for m in measures]
-
-    def rows(pred, cols, tag):
-        return full.filter(pred).select(
-            *keys, *cols, F.lit(tag).alias("_change_type")
-        )
-
-    return (
-        rows(in_delta & ~in_cur & alive, post, "insert")
-        .unionByName(rows(in_delta & in_cur & alive & changed, pre,
-                          "update_preimage"))
-        .unionByName(rows(in_delta & in_cur & alive & changed, post,
-                          "update_postimage"))
-        .unionByName(rows(in_cur & ~alive, pre, "delete"))
-    )
-
-
-def _stage_mv_fused(
+def _stage_mv_refresh(
     full: DataFrame, keys: list[str], measures: list[str], mv_path: str
-) -> tuple[list[dict], list[dict]] | None:
+) -> tuple[list[dict], list[dict]]:
     """ONE staging write for a refreshed view AND its change feed: each
     merged row of the annotated ``full`` frame (mv_count/_in_cur/_in_delta/
     _pre_* — the refresh merge shape shared by refresh_mv / refresh_star_mv
     / refresh_join_mv) explodes into its file roles — alive group → data
-    row; new / moved / emptied group → CDF rows, same predicates as
-    _mv_change_rows — so the merge join executes once and the staging costs
-    a single write job instead of checkpoint + two writes. Returns
-    (data_files, change_files), or None when fused staging is disabled
-    (SPARK_GRAFT_FUSED_STAGING=0) or a column name collides with the
-    role superset."""
-    if not _fused_staging_enabled() or (_FUSED_RESERVED & set(keys + measures)):
-        return None
+    row; new group → insert; group whose measures moved → update pre/
+    postimage pair; emptied group → delete — so the merge join executes
+    once and the staging costs a single write job. The change rows have
+    merge_snapshot's CDF shape, O(changed groups), which is what makes a
+    maintained view consumable by ANOTHER maintained view. Returns
+    (data_files, change_files)."""
     alive = F.col("mv_count") > 0
     in_cur, in_delta = F.col("_in_cur"), F.col("_in_delta")
     moved = F.lit(False)
     for m in measures:
         moved = moved | ~F.col(m).eqNullSafe(F.col(f"_pre_{m}"))
-    post = {m: F.col(m) for m in measures}
-    pre = {m: F.col(f"_pre_{m}") for m in measures}
+    fields = [(c, full.schema[c].dataType) for c in keys + measures] + [_CHANGE_TYPE]
+    key_vals = {k: F.col(k) for k in keys}
+    post = {**key_vals, **{m: F.col(m) for m in measures}}
+    pre = {**key_vals, **{m: F.col(f"_pre_{m}") for m in measures}}
 
-    def _role(kind, vals, ct):
-        return F.struct(
-            *[vals[m].alias(m) for m in measures],
-            ct.cast("string").alias("_change_type"),
-            F.lit(kind).alias("_kind"),
-        )
+    def _cdf(vals, ct):
+        return _role("cdf", fields, {**vals, "_change_type": F.lit(ct)})
 
-    nil = F.lit(None)
     upd = in_delta & in_cur & alive & moved
-    roles = F.array(
-        F.when(alive, _role("data", post, nil)),
-        F.when(in_delta & ~in_cur & alive, _role("cdf", post, F.lit("insert"))),
-        F.when(upd, _role("cdf", pre, F.lit("update_preimage"))),
-        F.when(upd, _role("cdf", post, F.lit("update_postimage"))),
-        F.when(in_cur & ~alive, _role("cdf", pre, F.lit("delete"))),
-    )
-    tagged = full.select(
-        *keys, F.explode(F.array_compact(roles)).alias("_r")
-    ).select(*keys, "_r.*")
-    staged = _stage_tagged_files(tagged, mv_path)
+    staged = _stage_files(full, mv_path, [
+        F.when(alive, _role("data", fields, post)),
+        F.when(in_delta & ~in_cur & alive, _cdf(post, "insert")),
+        F.when(upd, _cdf(pre, "update_preimage")),
+        F.when(upd, _cdf(post, "update_postimage")),
+        F.when(in_cur & ~alive, _cdf(pre, "delete")),
+    ])
     return staged.get("data", []), staged.get("cdf", [])
 
 
@@ -395,6 +355,7 @@ def refresh_mv(spark: SparkSession, mv_path: str) -> int:
             "between commit and meta write; rebuild with create_mv()"
         )
     base_path, keys, sums = meta["base_path"], meta["keys"], meta["sums"]
+    _refuse_role_columns(keys)
     mins, maxs = meta.get("mins", []), meta.get("maxs", [])
     distincts = meta.get("distincts", [])
     kmv_k = meta.get("kmv_k", 128)
@@ -600,16 +561,7 @@ def refresh_mv(spark: SparkSession, mv_path: str) -> int:
                 *[f"_pre_{mc}" for mc in measures],
             )
     merged = full.filter(F.col("mv_count") > 0).select(*keys, *measures)
-    fused = _stage_mv_fused(full, keys, measures, mv_path)
-    if fused is not None:
-        files, change_files = fused
-    else:
-        # one materialization reused by BOTH staging writes (data + changes)
-        full = full.localCheckpoint(eager=True)
-        merged = full.filter(F.col("mv_count") > 0).select(*keys, *measures)
-        changes = _mv_change_rows(full, keys, measures)
-        files = _stage_data_files(merged, mv_path)
-        change_files = _stage_data_files(changes, mv_path)
+    files, change_files = _stage_mv_refresh(full, keys, measures, mv_path)
     n = _count_staged(spark, mv_path, files)
     try:
         # kind='merge' + explicit change files: downstream incremental

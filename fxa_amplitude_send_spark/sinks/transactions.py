@@ -50,8 +50,8 @@ from .versioned import (
     _count_staged,
     _manifest_path,
     _read_manifest,
-    _stage_data_files,
     _stage_delete_mor,
+    _stage_files,
     _stage_merge_mor,
     _verify_staged_checks,
     current_version,
@@ -316,7 +316,7 @@ class MultiTableTxn:
         """Stage an append to ``table`` (which must already exist — a
         transaction coordinates EXISTING tables; create them first)."""
         self._check_stageable(table, "append")
-        files = _stage_data_files(df, table)
+        files = _stage_files(df, table)["data"]
         _verify_staged_checks(df.sparkSession, table, files)
         self._spark = df.sparkSession
         ops = self._ops.setdefault(table, [])
@@ -363,28 +363,24 @@ class MultiTableTxn:
         stage the summary merge, then commit both atomically. Without it
         the caller would re-join the batch against the fact table
         (O(fact) per batch) or trust the feed's preimages."""
-        ops = [
-            op
-            for op in self._ops.get(table, [])
-            if op["op"] in ("merge", "delete")
-        ]
-        if not ops:
+        ops = self._ops.get(table, [])
+        if not ops or ops[0]["op"] == "append":
             raise ValueError(f"no staged merge/delete for {table!r}")
-        paths = [
-            os.path.join(table, e["path"]) for op in ops
-            for e in op.get("change_files", [])
-        ]
-        if not paths:
-            # a staged mutation that changed NOTHING (every update was a
-            # no-op): fused staging writes no zero-row placeholder file,
-            # so synthesize the empty frame under the table schema
-            from pyspark.sql.types import StringType, StructType
+        # one mutation per table per transaction: read its change files
+        # under the schema of the version it was staged against (a later
+        # schema evolution must not leak in) — the staged files' padding
+        # columns of other roles are pruned, and no inference job runs
+        from pyspark.sql.types import StringType, StructType
 
-            schema = StructType.fromJson(
-                json.loads(_read_manifest(table, current_version(table))["schema"])
-            ).add("_change_type", StringType())
+        op = ops[0]
+        schema = StructType.fromJson(
+            json.loads(_read_manifest(table, op["base"])["schema"])
+        ).add("_change_type", StringType())
+        paths = [os.path.join(table, e["path"]) for e in op["change_files"]]
+        if not paths:
+            # every update was a no-op: no change file was staged
             return spark.createDataFrame([], schema)
-        return spark.read.parquet(*paths)
+        return spark.read.schema(schema).parquet(*paths)
 
     def staged_paths(self, table: str) -> list[str]:
         """Table-relative paths of every file this transaction staged into

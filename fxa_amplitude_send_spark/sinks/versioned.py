@@ -188,92 +188,98 @@ def _bloom_maybe_contains(entry: dict, col: str, value: object) -> bool:
     )
 
 
-def _stage_data_files(df: DataFrame, path: str) -> list[dict]:
-    """Write df into the shared data/ dir under a unique subdir, then return
-    manifest file entries {path, stats} (paths relative to the table root).
-    Files are immutable once written; the staging subdir keeps concurrent
-    writers from colliding. Footer min/max stats go INTO the manifest so
-    readers can prune files without opening any of them; tables with a
-    bloom policy additionally carry per-file bloom bitsets for
-    equality-probe skipping."""
+#: role discriminator of a multi-role staging write (``_vt_kind=<role>/``
+#: subdirs) and the (file, row position) columns of deletion-vector
+#: tombstones. The ``_vt_`` namespace keeps them apart from user columns.
+_KIND = "_vt_kind"
+_DV_PATH, _DV_POS = "_vt_path", "_vt_pos"
+_CHANGE_TYPE = ("_change_type", "string")
+_DV_FIELDS = [(_DV_PATH, "string"), (_DV_POS, "bigint")]
+
+
+def _refuse_role_columns(cols: list[str]) -> None:
+    """Refuse table / view key columns that would collide with a staging
+    role column: ``_change_type`` (CDF rows) or anything in the ``_vt_``
+    namespace (role discriminator, tombstone identity). Every merge,
+    delete and MV refresh calls this before staging, so a colliding column
+    fails loudly instead of being overwritten in the change files."""
+    for c in cols:
+        if c.lower() == "_change_type" or c.lower().startswith("_vt_"):
+            raise ValueError(
+                f"column {c!r} is reserved for staged change/deletion-vector "
+                "files (_change_type and the _vt_ prefix); rename it"
+            )
+
+
+def _role(kind: str, fields: list[tuple], vals: dict):
+    """One row role for ``_stage_files``: a struct over the write's staging
+    superset ``fields`` ((name, type) pairs, the same list for every role
+    of one write), holding ``vals`` for the columns this role fills and
+    typed nulls for the rest, tagged with the role name."""
+    from pyspark.sql import functions as F
+
+    return F.struct(
+        *[(vals[n] if n in vals else F.lit(None).cast(t)).alias(n) for n, t in fields],
+        F.lit(kind).alias(_KIND),
+    )
+
+
+def _stage_files(
+    df: DataFrame, path: str, roles: list | None = None
+) -> dict[str, list[dict]]:
+    """The one staging primitive: write under a unique ``data/stage-<hex>/``
+    dir and return manifest file entries {path, stats, n[, bloom]} (paths
+    relative to the table root) grouped by role. Files are immutable once
+    written and invisible until a manifest lists them; the staging subdir
+    keeps concurrent writers from colliding. Footer min/max stats and row
+    counts go INTO the entries so readers prune and commits count without
+    opening a file; tables with a bloom policy also carry per-file bloom
+    bitsets on the committed data roles ('data' / 'new').
+
+    Without ``roles`` ``df`` is written as is — no partitioning, no added
+    sort — and returned as role 'data'. With ``roles`` (``_role`` structs
+    over the rows of ``df``; null entries are skipped) every row explodes
+    into its roles and ONE ``_vt_kind``-partitioned write stages them all,
+    so the (possibly table-scale) subtree that derived them executes
+    exactly once. A role's files carry the whole superset, the other
+    roles' columns as nulls; every reader is role-schema'd — data files
+    under the manifest schema, deletion vectors (_vt_path, _vt_pos), CDF
+    readers table columns + _change_type — so the padding is pruned at the
+    columnar scan. Roles are passed, never inferred from ``df``'s columns:
+    a plain write may carry a user column named ``_vt_kind`` (merges,
+    deletes and refreshes refuse one; plain writes keep it)."""
     import pyarrow.parquet as pq
 
     policy = _load_bloom_policy(path)
     stage = f"stage-{uuid.uuid4().hex}"
     out = os.path.join(path, "data", stage)
-    df.write.mode("overwrite").parquet(out)
-    entries = []
-    for name in sorted(os.listdir(out)):
-        if name.endswith(".parquet"):
-            full = os.path.join(out, name)
-            entry = {
-                "path": os.path.join("data", stage, name),
-                "stats": _file_stats(full),
-                # authoritative footer row count: commits sum these
-                # instead of re-scanning the staged files (one fewer
-                # Spark job per commit)
-                "n": pq.ParquetFile(full).metadata.num_rows,
-            }
-            if policy:
-                cols = _file_blooms(full, policy)
-                if cols:
-                    entry["bloom"] = {
-                        "bits": policy["bits"],
-                        "k": policy["k"],
-                        "cols": cols,
-                    }
-            entries.append(entry)
-    return entries
+    if roles is None:
+        df.write.mode("overwrite").parquet(out)
+        subdirs = {"data": ""}
+    else:
+        from pyspark.sql import functions as F
 
-
-def _fused_staging_enabled() -> bool:
-    """Default ON: merge/delete file roles (data rows, deletion vectors, CDF
-    change rows) are staged in ONE Spark job via a _kind-partitioned write,
-    so the table-scale join/scan that derives them executes exactly once.
-    ``SPARK_GRAFT_FUSED_STAGING=0`` restores the per-role writes (the
-    round-9 shape) — the interleaved-A/B knob, not a production setting."""
-    return os.environ.get("SPARK_GRAFT_FUSED_STAGING", "1") != "0"
-
-
-#: column names the fused staging superset reserves; a table using any of
-#: them falls back to the per-role writes (correct, just more jobs).
-_FUSED_RESERVED = {"_change_type", "_kind", "path", "pos"}
-
-
-def _stage_tagged_files(df: DataFrame, path: str) -> dict[str, list[dict]]:
-    """Stage SEVERAL file roles in ONE Spark job: ``df`` carries a ``_kind``
-    discriminator column and the write splits roles into ``_kind=<role>/``
-    subdirs of one staging dir (partitionBy), so the (possibly table-scale)
-    subtree that produced the rows executes exactly once instead of once
-    per role. Returns manifest entries grouped by role.
-
-    Files of different roles never share bytes. A role's files may carry
-    null superset columns belonging to OTHER roles; every reader is
-    role-schema'd — data files are read under the manifest schema,
-    deletion vectors select (path, pos), CDF readers select table columns
-    + _change_type — so the padding columns are pruned at the columnar
-    scan and cost nothing. Bloom bitsets are built only for the committed
-    data roles ('data' / 'new'); stats land in every entry as usual."""
-    import pyarrow.parquet as pq
-
-    policy = _load_bloom_policy(path)
-    stage = f"stage-{uuid.uuid4().hex}"
-    out = os.path.join(path, "data", stage)
-    df.write.mode("overwrite").partitionBy("_kind").parquet(out)
+        tagged = df.select(
+            F.explode(F.array_compact(F.array(*roles))).alias("_r")
+        ).select("_r.*")
+        tagged.write.mode("overwrite").partitionBy(_KIND).parquet(out)
+        prefix = _KIND + "="
+        subdirs = {
+            d[len(prefix):]: d for d in sorted(os.listdir(out)) if d.startswith(prefix)
+        }
     entries: dict[str, list[dict]] = {}
-    for kind_dir in sorted(os.listdir(out)):
-        if not kind_dir.startswith("_kind="):
-            continue
-        kind = kind_dir.split("=", 1)[1]
-        rows = entries.setdefault(kind, [])
-        kdir = os.path.join(out, kind_dir)
+    for kind, sub in subdirs.items():
+        rows = entries[kind] = []
+        kdir = os.path.join(out, sub)
         for name in sorted(os.listdir(kdir)):
             if not name.endswith(".parquet"):
                 continue
             full = os.path.join(kdir, name)
             entry = {
-                "path": os.path.join("data", stage, kind_dir, name),
+                "path": os.path.join("data", stage, sub, name),
                 "stats": _file_stats(full),
+                # authoritative footer row count: commits sum these
+                # instead of re-scanning the staged files
                 "n": pq.ParquetFile(full).metadata.num_rows,
             }
             if policy and kind in ("data", "new"):
@@ -286,6 +292,39 @@ def _stage_tagged_files(df: DataFrame, path: str) -> dict[str, list[dict]]:
                     }
             rows.append(entry)
     return entries
+
+
+def _dv_groups(path: str, rels: list[str]) -> dict[tuple[str, str], list[str]]:
+    """Deletion-vector files grouped by the names of their tombstone
+    columns, taken from each file's parquet footer: files staged since the
+    role columns were namespaced carry (_vt_path, _vt_pos); older ones
+    carry (path, pos), alone or inside a multi-role superset."""
+    import pyarrow.parquet as pq
+
+    groups: dict[tuple[str, str], list[str]] = {}
+    for rel in rels:
+        full = os.path.join(path, rel)
+        names = pq.read_schema(full).names
+        cols = (_DV_PATH, _DV_POS) if _DV_PATH in names else ("path", "pos")
+        groups.setdefault(cols, []).append(full)
+    return groups
+
+
+def _read_dvs(spark: SparkSession, path: str, rels: list[str]) -> DataFrame:
+    """The tombstones of deletion-vector files ``rels`` as (_vt_path,
+    _vt_pos), each column layout read under an explicit schema — no
+    schema-inference job."""
+    from functools import reduce
+
+    from pyspark.sql import functions as F
+
+    frames = [
+        spark.read.schema(f"`{p}` STRING, `{q}` BIGINT")
+        .parquet(*files)
+        .select(F.col(p).alias(_DV_PATH), F.col(q).alias(_DV_POS))
+        for (p, q), files in _dv_groups(path, rels).items()
+    ]
+    return reduce(DataFrame.unionByName, frames)
 
 
 def _commit(
@@ -379,7 +418,7 @@ def write_snapshot(df: DataFrame, path: str) -> int:
     """Create version 1 (or fully replace the logical content with a new
     snapshot): stage data files, commit a manifest listing exactly them."""
     parent = current_version(path)
-    files = _stage_data_files(df, path)
+    files = _stage_files(df, path)["data"]
     _verify_staged_checks(df.sparkSession, path, files)
     n = _count_staged(df.sparkSession, path, files)
     return _commit(
@@ -399,7 +438,7 @@ def append_snapshot(df: DataFrame, path: str) -> int:
     if parent == 0:
         return write_snapshot(df, path)
     prev = _read_manifest(path, parent)
-    new_files = _stage_data_files(df, path)
+    new_files = _stage_files(df, path)["data"]
     _verify_staged_checks(df.sparkSession, path, new_files)
     n_new = _count_staged(df.sparkSession, path, new_files)
     return _commit(
@@ -456,7 +495,7 @@ def compact_snapshot(
         )
     else:
         df = df.coalesce(target_files)
-    files = _stage_data_files(df, path)
+    files = _stage_files(df, path)["data"]
     return _commit(
         path, files, prev["n_rows"], prev["schema"], version, appended=[], kind="compact"
     )
@@ -500,9 +539,9 @@ def optimize_snapshot(
     from collections import Counter
 
     counter: Counter = Counter()
-    for rel in prev.get("dvs") or []:
-        tbl = pq.read_table(os.path.join(path, rel), columns=["path"])
-        counter.update(tbl.column("path").to_pylist())
+    for (pcol, _), files in _dv_groups(path, prev.get("dvs") or []).items():
+        for full in files:
+            counter.update(pq.read_table(full, columns=[pcol]).column(0).to_pylist())
     dead = dict(counter)
 
     victims: list[str] = []
@@ -527,15 +566,15 @@ def optimize_snapshot(
     vset = set(victims)
     live_victims = _with_positions(
         spark, path, prev, [os.path.join(path, p) for p in victims], schema
-    ).drop("_vt_path", "_vt_pos")
-    new_files = _stage_data_files(live_victims.coalesce(target_files), path)
+    ).drop(_DV_PATH, _DV_POS)
+    new_files = _stage_files(live_victims.coalesce(target_files), path)["data"]
 
     dvs_out: list[str] | None = None
     if prev.get("dvs"):
-        remaining = spark.read.parquet(
-            *[os.path.join(path, p) for p in prev["dvs"]]
-        ).filter(~F.col("path").isin(victims))
-        new_dv_files = _stage_data_files(remaining, path)
+        remaining = _read_dvs(spark, path, prev["dvs"]).filter(
+            ~F.col(_DV_PATH).isin(victims)
+        )
+        new_dv_files = _stage_files(remaining, path)["data"]
         if sum(e["n"] for e in new_dv_files) > 0:
             dvs_out = [e["path"] for e in new_dv_files]
 
@@ -614,7 +653,7 @@ def read_snapshot(
     schema = StructType.fromJson(json.loads(manifest["schema"]))
     if manifest.get("dvs"):
         return _with_positions(spark, path, manifest, paths, schema).drop(
-            "_vt_path", "_vt_pos"
+            _DV_PATH, _DV_POS
         )
     return spark.read.schema(schema).parquet(*paths)
 
@@ -632,33 +671,24 @@ def _with_positions(spark, path, manifest, paths, schema):
     table's data root, even if the table path itself contains '/data/'."""
     from pyspark.sql import functions as F
 
-    reserved = {"_vt_path", "_vt_pos"} & {f.name for f in schema.fields}
-    if reserved:
-        raise ValueError(
-            f"columns {sorted(reserved)} are reserved for deletion-vector "
-            "row identity on merge-on-read tables; rename them"
-        )
+    _refuse_role_columns(schema.fieldNames())
     df = spark.read.schema(schema).parquet(*paths).select(
         "*",
         F.concat(
             F.lit("data/"),
             F.substring_index(F.col("_metadata.file_path"), "/data/", -1),
-        ).alias("_vt_path"),
-        F.col("_metadata.row_index").alias("_vt_pos"),
+        ).alias(_DV_PATH),
+        F.col("_metadata.row_index").alias(_DV_POS),
     )
     dvs = manifest.get("dvs") or []
     if dvs:
-        dv = spark.read.parquet(
-            *[os.path.join(path, p) for p in dvs]
-        ).select(
-            F.col("path").alias("_vt_path"), F.col("pos").alias("_vt_pos")
-        )
+        dv = _read_dvs(spark, path, dvs)
         # No forced broadcast: Catalyst/AQE broadcasts the tombstone side
         # when it is small (the common case) and degrades to a shuffled
         # anti-join when a table has accumulated huge vectors — forcing
         # the hint OOMs small drivers exactly when deletes are biggest
         # (caught by the sf1 study).
-        df = df.join(dv, ["_vt_path", "_vt_pos"], "left_anti")
+        df = df.join(dv, [_DV_PATH, _DV_POS], "left_anti")
     return df
 
 
@@ -1060,12 +1090,12 @@ def append_snapshot_idempotent(df: DataFrame, path: str, txn_id: str) -> int:
     if txn_id in seen:
         return version
     if version == 0:
-        files = _stage_data_files(df, path)
+        files = _stage_files(df, path)["data"]
         _verify_staged_checks(df.sparkSession, path, files)
         n = _count_staged(df.sparkSession, path, files)
         return _commit(path, files, n, df.schema.json(), 0, txn_id=txn_id, kind="create")
     prev = _read_manifest(path, version)
-    new_files = _stage_data_files(df, path)
+    new_files = _stage_files(df, path)["data"]
     _verify_staged_checks(df.sparkSession, path, new_files)
     n_new = _count_staged(df.sparkSession, path, new_files)
     return _commit(
@@ -1175,6 +1205,7 @@ def merge_snapshot(
     cols = cur.columns
     if sorted(updates.columns) != sorted(cols):
         raise ValueError(f"updates schema {updates.columns} != table schema {cols}")
+    _refuse_role_columns(cols)
 
     from pyspark.sql import functions as F
 
@@ -1192,12 +1223,10 @@ def merge_snapshot(
     # re-execution is a columnar scan + broadcast probe, while the cache
     # materializes the full O(table) marker-annotated rows through the block
     # manager — q_mv_incremental 3.3→13.3 s, q_cdf_read 2.4→6.2 s,
-    # q_mv_star 5.0→11.7 s WITH the persist. Round 10 removes the
-    # re-executions WITHOUT a cache: every join row explodes into its file
-    # ROLES (data rewrite / CDF post / CDF pre) and one _kind-partitioned
-    # write stages all of them — the join runs exactly once per merge at
-    # any scale, and the write volume is identical to the two per-role
-    # writes it replaces.
+    # q_mv_star 5.0→11.7 s WITH the persist. Instead every join row
+    # explodes into its file ROLES (data rewrite / CDF post / CDF pre) and
+    # one role-partitioned write stages all of them — the join runs exactly
+    # once per merge at any scale, without a cache.
     c2 = cur.withColumn("_c_present", F.lit(1)).alias("c")
     u2 = updates.select(*cols).withColumn("_u_present", F.lit(1)).alias("u")
     j2 = c2.join(u2, key_cols, "full_outer")
@@ -1210,64 +1239,29 @@ def merge_snapshot(
     u_present = F.col("_u_present").isNotNull()
     matched = u_present & F.col("_c_present").isNotNull()
 
-    if _fused_staging_enabled() and not (_FUSED_RESERVED & set(cols)):
-        # post-image change type: insert for new keys, update_postimage for
-        # genuinely changed rows, null (no CDF row) for no-op updates and
-        # current-only rows.
-        post_ct = (
-            F.when(u_present & F.col("_c_present").isNull(), F.lit("insert"))
-            .when(matched & changed_pred, F.lit("update_postimage"))
-        )
-
-        def _role(kind: str, vals: dict, ct):
-            return F.struct(
-                *[vals[x].alias(x) for x in val_cols],
-                ct.cast("string").alias("_change_type"),
-                F.lit(kind).alias("_kind"),
-            )
-
-        pre_val = {x: F.col(f"c.{x}") for x in val_cols}
-        roles = F.array(
-            _role("data", merged_val, F.lit(None)),
-            F.when(post_ct.isNotNull(), _role("cdf", merged_val, post_ct)),
-            F.when(
-                matched & changed_pred,
-                _role("cdf", pre_val, F.lit("update_preimage")),
-            ),
-        )
-        tagged = j2.select(
-            *key_cols, F.explode(F.array_compact(roles)).alias("_r")
-        ).select(*key_cols, "_r.*")
-        staged = _stage_tagged_files(tagged.select(*cols, "_change_type", "_kind"), path)
-        data_files = staged.get("data", [])
-        change_files = staged.get("cdf", [])
-    else:
-        merged = j2.select(
-            *key_cols,
-            *[merged_val[x].alias(x) for x in val_cols],
-        ).select(*cols)
-        changes_post = j2.filter(u_present).select(
-            *key_cols,
-            *[merged_val[x].alias(x) for x in val_cols],
-            F.when(F.col("_c_present").isNull(), F.lit("insert"))
-            .when(changed_pred, F.lit("update_postimage"))
-            .otherwise(F.lit(None))
-            .alias("_change_type"),
-        ).filter(F.col("_change_type").isNotNull()).select(*cols, "_change_type")
-        # Delta-parity pre-images: for every genuinely updated key, the OLD
-        # row values under _change_type='update_preimage'. Consumers that
-        # maintain downstream state incrementally subtract the pre-image and
-        # add the post-image — without pre-images, SUM/COUNT maintenance
-        # under updates would need a time-travel join against the parent
-        # snapshot (O(table), not O(changes)).
-        changes_pre = j2.filter(matched).filter(changed_pred).select(
-            *key_cols,
-            *[F.col(f"c.{x}").alias(x) for x in val_cols],
-            F.lit("update_preimage").alias("_change_type"),
-        ).select(*cols, "_change_type")
-        changes = changes_post.unionByName(changes_pre)
-        data_files = _stage_data_files(merged, path)
-        change_files = _stage_data_files(changes, path)
+    # post-image change type: insert for new keys, update_postimage for
+    # genuinely changed rows, null (no CDF row) for no-op updates and
+    # current-only rows.
+    post_ct = (
+        F.when(u_present & F.col("_c_present").isNull(), F.lit("insert"))
+        .when(matched & changed_pred, F.lit("update_postimage"))
+    )
+    fields = [(f.name, f.dataType) for f in cur.schema.fields] + [_CHANGE_TYPE]
+    post = {**{k: F.col(k) for k in key_cols}, **merged_val}
+    pre = {**{k: F.col(k) for k in key_cols}, **{x: F.col(f"c.{x}") for x in val_cols}}
+    staged = _stage_files(j2, path, [
+        _role("data", fields, post),
+        F.when(
+            post_ct.isNotNull(),
+            _role("cdf", fields, {**post, "_change_type": post_ct}),
+        ),
+        F.when(
+            matched & changed_pred,
+            _role("cdf", fields, {**pre, "_change_type": F.lit("update_preimage")}),
+        ),
+    ])
+    data_files = staged.get("data", [])
+    change_files = staged.get("cdf", [])
     # constraints: only rows NEW in this version can introduce a violation
     # (pre-existing rows passed when first written) — validate the
     # insert/update_postimage change rows, O(changes) not O(table)
@@ -1285,6 +1279,22 @@ def merge_snapshot(
         changes=change_files,
         kind="merge",
     )
+
+
+def _stage_deletes(matches: DataFrame, schema, path: str) -> tuple[list, list]:
+    """Stage a delete's roles from its matched positioned rows
+    (``_with_positions`` output) in ONE write: per row a (_vt_path,
+    _vt_pos) tombstone and a CDF delete pre-image. Returns (dv_files,
+    change_files)."""
+    from pyspark.sql import functions as F
+
+    fields = [(f.name, f.dataType) for f in schema.fields] + [_CHANGE_TYPE, *_DV_FIELDS]
+    row = {c: F.col(c) for c in schema.fieldNames()}
+    staged = _stage_files(matches, path, [
+        _role("dv", fields, {_DV_PATH: F.col(_DV_PATH), _DV_POS: F.col(_DV_POS)}),
+        _role("cdf", fields, {**row, "_change_type": F.lit("delete")}),
+    ])
+    return staged.get("dv", []), staged.get("cdf", [])
 
 
 def delete_keys_mor(
@@ -1308,7 +1318,6 @@ def delete_keys_mor(
         raise FileNotFoundError(f"no committed snapshot at {path}")
     prev = _read_manifest(path, version)
 
-    from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
 
     schema = StructType.fromJson(json.loads(prev["schema"]))
@@ -1319,42 +1328,7 @@ def delete_keys_mor(
     live = _with_positions(spark, path, prev, paths, schema)
     matches = live.join(keys.select(*key_cols).distinct(), key_cols, "left_semi")
 
-    cols = [f.name for f in schema.fields]
-    if _fused_staging_enabled() and not (_FUSED_RESERVED & set(cols)):
-        # one pass: each matched row explodes into tombstone + CDF pre-image,
-        # staged together in one _kind-partitioned write (vs two jobs that
-        # each re-ran the positioned scan + semi-join)
-        types = {f.name: f.dataType for f in schema.fields}
-        nil = F.lit(None)
-        roles = F.array(
-            F.struct(
-                *[nil.cast(types[x]).alias(x) for x in cols],
-                nil.cast("string").alias("_change_type"),
-                F.col("_vt_path").cast("string").alias("path"),
-                F.col("_vt_pos").cast("long").alias("pos"),
-                F.lit("dv").alias("_kind"),
-            ),
-            F.struct(
-                *[F.col(x).alias(x) for x in cols],
-                F.lit("delete").cast("string").alias("_change_type"),
-                nil.cast("string").alias("path"),
-                nil.cast("long").alias("pos"),
-                F.lit("cdf").alias("_kind"),
-            ),
-        )
-        tagged = matches.select(F.explode(roles).alias("_r")).select("_r.*")
-        staged = _stage_tagged_files(tagged, path)
-        dv_files = staged.get("dv", [])
-        change_files = staged.get("cdf", [])
-    else:
-        dv_rows = matches.select(
-            F.col("_vt_path").alias("path"), F.col("_vt_pos").alias("pos")
-        )
-        deleted = matches.drop("_vt_path", "_vt_pos").withColumn(
-            "_change_type", F.lit("delete")
-        )
-        dv_files = _stage_data_files(dv_rows, path)
-        change_files = _stage_data_files(deleted, path)
+    dv_files, change_files = _stage_deletes(matches, schema, path)
     n_deleted = sum(e["n"] for e in dv_files)
     return _commit(
         path,
@@ -1458,89 +1432,31 @@ def _stage_merge_mor(
     # REJECTED (interleaved same-session A/B at sf0.1: q_stream_txn_merge
     # median 27.9 s persisted vs 17.6 s unpersisted — when the CDC batch is
     # comparable to the table, funneling every joined row through the block
-    # manager costs more than the scans it saves). Round 9 staged the
-    # effective rows once to a scratch parquet and derived the three file
-    # sets from an O(changes) re-read (1 join + 4 write jobs per merge);
-    # round 10 removes the scratch entirely: each effective row (insert |
-    # value-changed — matched-unchanged rows are complete no-ops and never
-    # leave the join) EXPLODES into its file roles (new row / tombstone /
-    # CDF post / CDF pre) and one _kind-partitioned write stages all of
-    # them — one table pass AND one write job per merge at any scale.
+    # manager costs more than the scans it saves). Instead each effective
+    # row (insert | value-changed — matched-unchanged rows are complete
+    # no-ops and never leave the join) EXPLODES into its file roles (new
+    # row / tombstone / CDF post / CDF pre) and one role-partitioned write
+    # stages all of them — one table pass AND one write job per merge at
+    # any scale.
     matched = F.col("_c_present").isNotNull()
     eff = j2.filter(F.col("_c_present").isNull() | changed_pred)
-    if _fused_staging_enabled() and not (_FUSED_RESERVED & set(cols)):
-        types = {f.name: f.dataType for f in schema.fields}
-        null_val = {x: F.lit(None).cast(types[x]) for x in val_cols}
-        pre_val = {x: F.col(f"c.{x}") for x in val_cols}
-
-        def _role(kind, vals, ct, pth, pos):
-            return F.struct(
-                *[vals[x].alias(x) for x in val_cols],
-                ct.cast("string").alias("_change_type"),
-                pth.cast("string").alias("path"),
-                pos.cast("long").alias("pos"),
-                F.lit(kind).alias("_kind"),
-            )
-
-        nil = F.lit(None)
-        roles = F.array(
-            _role("new", merged_val, nil, nil, nil),
-            F.when(
-                matched,
-                _role("dv", null_val, nil, F.col("c._vt_path"), F.col("c._vt_pos")),
-            ),
-            _role(
-                "cdf",
-                merged_val,
-                F.when(matched, F.lit("update_postimage")).otherwise(F.lit("insert")),
-                nil,
-                nil,
-            ),
-            F.when(matched, _role("cdf", pre_val, F.lit("update_preimage"), nil, nil)),
-        )
-        tagged = eff.select(
-            *key_cols, F.explode(F.array_compact(roles)).alias("_r")
-        ).select(*key_cols, "_r.*")
-        staged = _stage_tagged_files(tagged, path)
-        new_files = staged.get("new", [])
-        dv_files = staged.get("dv", [])
-        change_files = staged.get("cdf", [])
-    else:
-        combined = eff.select(
-            *key_cols,
-            *[merged_val[x].alias(x) for x in val_cols],
-            *[F.col(f"c.{x}").alias(f"_pre_{x}") for x in val_cols],
-            matched.alias("_matched"),
-            F.col("c._vt_path").alias("_vt_path"),
-            F.col("c._vt_pos").alias("_vt_pos"),
-        )
-        scratch = os.path.join(path, "_tmp", f"merge-{uuid.uuid4().hex}")
-        combined.write.mode("overwrite").parquet(scratch)
-        try:
-            cm = spark.read.schema(combined.schema).parquet(scratch)
-            new_rows = cm.select(*cols)
-            tombstones = cm.filter("_matched").select(
-                F.col("_vt_path").alias("path"), F.col("_vt_pos").alias("pos")
-            )
-            changes = cm.select(
-                *cols,
-                F.when(F.col("_matched"), F.lit("update_postimage"))
-                .otherwise(F.lit("insert"))
-                .alias("_change_type"),
-            ).unionByName(
-                cm.filter("_matched").select(
-                    *key_cols,
-                    *[F.col(f"_pre_{x}").alias(x) for x in val_cols],
-                    F.lit("update_preimage").alias("_change_type"),
-                ).select(*cols, "_change_type")
-            )
-            new_files = _stage_data_files(new_rows, path)
-            dv_files = _stage_data_files(tombstones, path)
-            change_files = _stage_data_files(changes, path)
-        finally:
-            import shutil
-
-            shutil.rmtree(scratch, ignore_errors=True)
+    fields = [(f.name, f.dataType) for f in schema.fields] + [_CHANGE_TYPE, *_DV_FIELDS]
+    post = {**{k: F.col(k) for k in key_cols}, **merged_val}
+    pre = {**{k: F.col(k) for k in key_cols}, **{x: F.col(f"c.{x}") for x in val_cols}}
+    post_ct = F.when(matched, F.lit("update_postimage")).otherwise(F.lit("insert"))
+    tombstone = {_DV_PATH: F.col(f"c.{_DV_PATH}"), _DV_POS: F.col(f"c.{_DV_POS}")}
+    staged = _stage_files(eff, path, [
+        _role("new", fields, post),
+        F.when(matched, _role("dv", fields, tombstone)),
+        _role("cdf", fields, {**post, "_change_type": post_ct}),
+        F.when(
+            matched,
+            _role("cdf", fields, {**pre, "_change_type": F.lit("update_preimage")}),
+        ),
+    ])
+    new_files = staged.get("new", [])
+    dv_files = staged.get("dv", [])
+    change_files = staged.get("cdf", [])
     _verify_staged_checks(
         spark, path, change_files, where="_change_type != 'update_preimage'"
     )
@@ -1571,27 +1487,20 @@ def delete_snapshot(spark: SparkSession, path: str, predicate: str) -> int:
     from pyspark.sql import functions as F
 
     # One table pass: each row routes to its role (survivor data file or
-    # CDF delete pre-image) and one _kind-partitioned write stages both —
+    # CDF delete pre-image) and one role-partitioned write stages both —
     # vs two filtered scans + two write jobs. NULL-predicate rows keep the
     # historical semantics exactly: filter(NOT pred) and filter(pred) BOTH
     # dropped them, so they route to no role at all.
-    if _fused_staging_enabled() and not (_FUSED_RESERVED & set(cur.columns)):
-        pred = F.expr(predicate)
-        tagged = cur.select(
-            "*",
-            F.when(pred, F.lit("delete")).alias("_change_type"),
-            F.when(pred, F.lit("cdf")).when(~pred, F.lit("data")).alias("_kind"),
-        ).filter(F.col("_kind").isNotNull())
-        staged = _stage_tagged_files(tagged, path)
-        data_files = staged.get("data", [])
-        change_files = staged.get("cdf", [])
-    else:
-        surviving = cur.filter(f"NOT ({predicate})")
-        deleted = cur.filter(predicate).withColumn(
-            "_change_type", F.lit("delete")
-        )
-        data_files = _stage_data_files(surviving, path)
-        change_files = _stage_data_files(deleted, path)
+    _refuse_role_columns(cur.columns)
+    pred = F.expr(predicate)
+    fields = [(f.name, f.dataType) for f in cur.schema.fields] + [_CHANGE_TYPE]
+    row = {c: F.col(c) for c in cur.columns}
+    staged = _stage_files(cur, path, [
+        F.when(~pred, _role("data", fields, row)),
+        F.when(pred, _role("cdf", fields, {**row, "_change_type": F.lit("delete")})),
+    ])
+    data_files = staged.get("data", [])
+    change_files = staged.get("cdf", [])
     n = _count_staged(spark, path, data_files)
     return _commit(
         path,
@@ -1652,60 +1561,14 @@ def _stage_delete_mor(
     the caller's commit. Positions bind to ``prev``'s file set — a deferred
     commit (MultiTableTxn.stage_delete) must verify the parent is still
     ``prev``."""
-    from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
 
     schema = StructType.fromJson(json.loads(prev["schema"]))
     paths = [os.path.join(path, e["path"]) for e in prev["files"]]
     live = _with_positions(spark, path, prev, paths, schema)
-    # tombstones AND change pre-images derive from the same filtered scan —
-    # staged directly, each write would re-run the O(table) scan. Round 9
-    # wrote the O(deleted) match set once to a scratch parquet and derived
-    # both file sets from the re-read (3 jobs); round 10 explodes each
-    # matched row into its two roles (tombstone + CDF pre-image) and stages
-    # both in ONE _kind-partitioned write: one table pass, one write job.
-    matches = live.filter(predicate)
-    cols = [f.name for f in schema.fields]
-    if _fused_staging_enabled() and not (_FUSED_RESERVED & set(cols)):
-        types = {f.name: f.dataType for f in schema.fields}
-        nil = F.lit(None)
-        roles = F.array(
-            F.struct(
-                *[nil.cast(types[x]).alias(x) for x in cols],
-                nil.cast("string").alias("_change_type"),
-                F.col("_vt_path").cast("string").alias("path"),
-                F.col("_vt_pos").cast("long").alias("pos"),
-                F.lit("dv").alias("_kind"),
-            ),
-            F.struct(
-                *[F.col(x).alias(x) for x in cols],
-                F.lit("delete").cast("string").alias("_change_type"),
-                nil.cast("string").alias("path"),
-                nil.cast("long").alias("pos"),
-                F.lit("cdf").alias("_kind"),
-            ),
-        )
-        tagged = matches.select(F.explode(roles).alias("_r")).select("_r.*")
-        staged = _stage_tagged_files(tagged, path)
-        dv_files = staged.get("dv", [])
-        change_files = staged.get("cdf", [])
-    else:
-        scratch = os.path.join(path, "_tmp", f"delete-{uuid.uuid4().hex}")
-        matches.write.mode("overwrite").parquet(scratch)
-        try:
-            cm = spark.read.schema(matches.schema).parquet(scratch)
-            dv_rows = cm.select(
-                F.col("_vt_path").alias("path"), F.col("_vt_pos").alias("pos")
-            )
-            deleted = cm.drop("_vt_path", "_vt_pos").withColumn(
-                "_change_type", F.lit("delete")
-            )
-            dv_files = _stage_data_files(dv_rows, path)
-            change_files = _stage_data_files(deleted, path)
-        finally:
-            import shutil
-
-            shutil.rmtree(scratch, ignore_errors=True)
+    # tombstones AND change pre-images derive from the same filtered scan,
+    # so both roles stage in ONE write: one table pass, one write job.
+    dv_files, change_files = _stage_deletes(live.filter(predicate), schema, path)
     return {
         "dv_files": dv_files,
         "change_files": change_files,
@@ -1749,7 +1612,7 @@ def append_snapshot_evolve(df: DataFrame, path: str) -> int:
             for f in unioned.fields
         ]
     )
-    new_files = _stage_data_files(aligned, path)
+    new_files = _stage_files(aligned, path)["data"]
     n_new = _count_staged(df.sparkSession, path, new_files)
     return _commit(
         path,

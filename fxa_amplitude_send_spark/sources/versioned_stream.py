@@ -141,7 +141,14 @@ class _VersionedStreamReader(DataSourceStreamReader):
             return
         import pyarrow.parquet as pq
 
-        table = pq.read_table(partition.full_path)
+        # only the partition's fields the file has: staged change files
+        # carry other roles' null padding, and files written before a
+        # schema evolution lack newer columns (null-filled by row.get)
+        present = set(pq.read_schema(partition.full_path).names)
+        table = pq.read_table(
+            partition.full_path,
+            columns=[n for n in partition.field_names if n in present],
+        )
         for row in table.to_pylist():
             out = tuple(row.get(name) for name in partition.field_names)
             if partition.synth_change is not None:

@@ -204,10 +204,6 @@ def ingest_batch_neardup(
     # (narrower shuffle, one less exchange; guide §2.3). The HISTORY
     # path keeps its pair dedup because there duplicates would multiply
     # a subsequent signature-fetch join, not an inline expression.
-    # SPARK_GRAFT_NEARDUP_PAIR_DEDUP=1 restores the round-8 wide dedup —
-    # the interleaved-A/B measurement seam, not a production setting.
-    if os.environ.get("SPARK_GRAFT_NEARDUP_PAIR_DEDUP") == "1":
-        pairs = pairs.dropDuplicates(["_a", "_b"])
     losers = (
         pairs
         .filter(agree >= threshold)

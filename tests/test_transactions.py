@@ -585,3 +585,27 @@ def test_stream_cdc_merge_crash_after_marker_recovers_and_replays(spark, tmp_pat
     q2.awaitTermination()
     assert current_version(fact) == 3 and current_version(summ) == 3
     assert {r.k: r.v for r in read_snapshot(spark, fact).collect()} == got
+
+
+@pytest.mark.parametrize("case", ["noop_before_evolve", "real_merge"])
+def test_staged_changes_are_table_columns_plus_change_type(spark, tmp_path, case):
+    """staged_changes returns exactly the staged-against version's columns
+    + _change_type: no padding columns of the other staged roles, and a
+    schema evolution landing after the stage does not leak into it."""
+    from fxa_amplitude_send_spark.sinks.versioned import append_snapshot_evolve
+
+    (a,) = _mk_tables(spark, tmp_path, n=1)  # k=1, v=10
+    txn = MultiTableTxn(str(tmp_path / "txlog"))
+    if case == "noop_before_evolve":
+        txn.stage_merge(a, spark.createDataFrame([Row(k=1, v=10)]), ["k"])
+        append_snapshot_evolve(spark.createDataFrame([Row(k=2, v=20, w="x")]), a)
+        want = []
+    else:
+        txn.stage_merge(
+            a, spark.createDataFrame([Row(k=1, v=99), Row(k=3, v=30)]), ["k"]
+        )
+        want = [(1, 10, "update_preimage"), (1, 99, "update_postimage"),
+                (3, 30, "insert")]
+    cdf = txn.staged_changes(a, spark)
+    assert cdf.columns == ["k", "v", "_change_type"]
+    assert sorted(tuple(r) for r in cdf.collect()) == want

@@ -64,9 +64,9 @@ def test_orphan_staged_files_invisible_to_readers(spark, base, tmp_path):
     path = str(tmp_path / "t")
     write_snapshot(base, path)
     # simulate a crash: stage data without committing a manifest
-    from fxa_amplitude_send_spark.sinks.versioned import _stage_data_files
+    from fxa_amplitude_send_spark.sinks.versioned import _stage_files
 
-    _stage_data_files(base, path)
+    _stage_files(base, path)
     assert _ids(read_snapshot(spark, path)) == _ids(base)
     assert current_version(path) == 1
 
@@ -548,7 +548,7 @@ def test_concurrent_committers_exactly_one_wins(spark, base, tmp_path):
         _commit,
         _manifest_path,
         _read_manifest,
-        _stage_data_files,
+        _stage_files,
     )
 
     path = str(tmp_path / "t")
@@ -558,8 +558,8 @@ def test_concurrent_committers_exactly_one_wins(spark, base, tmp_path):
     # both writers observe parent=1 and stage their data before committing
     df_a = base.filter("n_nationkey = 20")
     df_b = base.filter("n_nationkey = 21")
-    files_a = _stage_data_files(df_a, path)
-    files_b = _stage_data_files(df_b, path)
+    files_a = _stage_files(df_a, path)["data"]
+    files_b = _stage_files(df_b, path)["data"]
     prev = _read_manifest(path, parent)
 
     va = _commit(path, prev["files"] + files_a, prev["n_rows"] + 1,
@@ -1417,13 +1417,91 @@ def test_register_versioned_view_sql_time_travel(spark, base, tmp_path):
         register_versioned_view(spark, "x", path, version=1, timestamp=t1)
 
 
-def test_mor_reserved_column_names_refused(spark, base, tmp_path):
-    from fxa_amplitude_send_spark.sinks.versioned import delete_snapshot_mor
+def _refusal_entry_points():
+    """Every merge, delete and MV refresh entry point, as
+    run(spark, table, rows, col, tmp) over a table ``rows`` =
+    (n_nationkey, col) already written at ``table``."""
+    from fxa_amplitude_send_spark.sinks import versioned as vt
+    from fxa_amplitude_send_spark.sinks.join_mv import create_join_mv, refresh_join_mv
+    from fxa_amplitude_send_spark.sinks.materialized_view import create_mv, refresh_mv
+    from fxa_amplitude_send_spark.sinks.star_mv import create_star_mv, refresh_star_mv
+    from fxa_amplitude_send_spark.sinks.transactions import MultiTableTxn
 
+    def merge(spark, t, rows, col, tmp):
+        vt.merge_snapshot(spark, t, rows.limit(1), ["n_nationkey"])
+
+    def merge_mor(spark, t, rows, col, tmp):
+        vt.merge_snapshot_mor(spark, t, rows.limit(1), ["n_nationkey"])
+
+    def delete(spark, t, rows, col, tmp):
+        vt.delete_snapshot(spark, t, "n_nationkey = 1")
+
+    def delete_mor(spark, t, rows, col, tmp):
+        vt.delete_snapshot_mor(spark, t, "n_nationkey = 1")
+
+    def delete_keys(spark, t, rows, col, tmp):
+        vt.delete_keys_mor(spark, t, rows.limit(1), ["n_nationkey"])
+
+    def txn_merge(spark, t, rows, col, tmp):
+        MultiTableTxn(str(tmp / "txlog")).stage_merge(t, rows.limit(1), ["n_nationkey"])
+
+    def txn_delete(spark, t, rows, col, tmp):
+        MultiTableTxn(str(tmp / "txlog")).stage_delete(t, "n_nationkey = 1", spark)
+
+    def other(rows, tmp):
+        d = str(tmp / "other")
+        write_snapshot(
+            rows.select("n_nationkey", (F.col("n_nationkey") % 5).alias("n_regionkey")), d
+        )
+        return d
+
+    def mv(spark, t, rows, col, tmp):
+        create_mv(spark, t, str(tmp / "mv"), keys=[col], sums=["n_nationkey"])
+        append_snapshot(rows.limit(1), t)
+        refresh_mv(spark, str(tmp / "mv"))
+
+    def join_mv(spark, t, rows, col, tmp):
+        # the key lives on the dim side and only the fact moves, so no
+        # change feed carries it: the view's own staging must refuse it
+        fact = other(rows, tmp)
+        create_join_mv(spark, fact, t, str(tmp / "mv"), on=["n_nationkey"],
+                       keys=[col], sums=["n_regionkey"])
+        append_snapshot(read_snapshot(spark, fact).limit(1), fact)
+        refresh_join_mv(spark, str(tmp / "mv"))
+
+    def star_mv(spark, t, rows, col, tmp):
+        create_star_mv(spark, t, [{"path": other(rows, tmp), "on": ["n_nationkey"]}],
+                       str(tmp / "mv"), keys=[col], sums=["n_regionkey"])
+        append_snapshot(rows.limit(1), t)
+        refresh_star_mv(spark, str(tmp / "mv"))
+
+    return {
+        "merge_snapshot": merge,
+        "merge_snapshot_mor": merge_mor,
+        "delete_snapshot": delete,
+        "delete_snapshot_mor": delete_mor,
+        "delete_keys_mor": delete_keys,
+        "txn_stage_merge": txn_merge,
+        "txn_stage_delete": txn_delete,
+        "refresh_mv": mv,
+        "refresh_join_mv": join_mv,
+        "refresh_star_mv": star_mv,
+    }
+
+
+@pytest.mark.parametrize("entry", sorted(_refusal_entry_points()))
+@pytest.mark.parametrize("col", ["_change_type", "_vt_kind", "_vt_path"])
+def test_mor_reserved_column_names_refused(spark, base, tmp_path, col, entry):
+    """A table or view key column that collides with a staging role column
+    is refused loudly, naming the column, by every merge, delete and MV
+    refresh — never silently overwritten in the staged change files."""
+    import re
+
+    rows = base.withColumnRenamed("n_name", col)
     path = str(tmp_path / "t")
-    write_snapshot(base.withColumnRenamed("n_name", "_vt_pos"), path)
-    with pytest.raises(ValueError, match="reserved"):
-        delete_snapshot_mor(spark, path, "n_nationkey = 1")
+    write_snapshot(rows, path)
+    with pytest.raises(ValueError, match=re.escape(f"{col!r} is reserved")):
+        _refusal_entry_points()[entry](spark, path, rows, col, tmp_path)
 
 
 def test_stream_cdf_delivers_mor_deletes(spark, base, tmp_path):
@@ -1605,3 +1683,172 @@ def test_clone_carries_check_constraints(spark, base, tmp_path):
     )
     with pytest.raises(ValueError, match="key_nonneg"):
         append_snapshot(bad, dst)
+
+
+def _named_events(spark, sf_smoke, names):
+    """sf0.001 events as (event_id, <path>, <pos>, <kind>, value)."""
+    ev = load_table(spark, sf_smoke, "events")
+    return ev.select(
+        "event_id",
+        F.col("event_type").alias(names[0]),
+        F.col("user_id").alias(names[1]),
+        F.col("props").alias(names[2]),
+        "value",
+    )
+
+
+def _run_named_lifecycle(spark, sf_smoke, root, names, op):
+    """Write → MV keyed on the <path> column → MoR delete → ``op``; returns
+    the snapshot rows, the change feed since v1, the refreshed view and the
+    per-version commit shape, each in a column-name-free form."""
+    from fxa_amplitude_send_spark.sinks.materialized_view import (
+        create_mv,
+        read_mv,
+        refresh_mv,
+    )
+    from fxa_amplitude_send_spark.sinks.versioned import (
+        delete_keys_mor,
+        delete_snapshot,
+        delete_snapshot_mor,
+        merge_snapshot,
+        merge_snapshot_mor,
+        optimize_snapshot,
+        read_change_feed,
+        table_history,
+    )
+
+    path_c, pos_c, _ = names
+    t, mv = str(root / "t"), str(root / "mv")
+    ev = _named_events(spark, sf_smoke, names)
+    write_snapshot(ev.repartition(4), t)                          # v1
+    create_mv(spark, t, mv, keys=[path_c], sums=["value"])
+    delete_snapshot_mor(spark, t, f"{pos_c} % 4 = 1")              # v2
+    upd = ev.filter("event_id % 5 = 0").withColumn(
+        "value", F.col("value") + 1
+    ).unionByName(
+        ev.filter("event_id < 20").withColumn("event_id", F.col("event_id") + 100000)
+    )
+    if op == "merge_snapshot":
+        merge_snapshot(spark, t, upd, ["event_id"])
+    elif op == "merge_snapshot_mor":
+        merge_snapshot_mor(spark, t, upd, ["event_id"])
+    elif op == "delete_snapshot":
+        delete_snapshot(spark, t, f"{pos_c} % 3 = 0")
+    elif op == "delete_snapshot_mor":
+        delete_snapshot_mor(spark, t, f"{pos_c} % 3 = 0")
+    elif op == "delete_keys_mor":
+        keys = ev.filter("event_type = 'error'").select(path_c)
+        delete_keys_mor(spark, t, keys, [path_c])
+    else:
+        assert optimize_snapshot(spark, t, dead_ratio=0.1) == 3
+    refresh_mv(spark, mv)
+
+    def rows(df):
+        return sorted((tuple(r) for r in df.collect()), key=repr)
+
+    shape = [
+        (h["kind"], h["n_rows"], h["n_files"],
+         len(snapshot_info(t, h["version"]).get("dvs", [])))
+        for h in table_history(t)
+    ]
+    return (
+        rows(read_snapshot(spark, t)),
+        rows(read_change_feed(spark, t, 1).select(*ev.columns, "_change_type")),
+        [(k, n, round(s, 6)) for k, n, s in rows(read_mv(spark, mv))],
+        shape,
+    )
+
+
+@pytest.mark.parametrize(
+    "op",
+    ["merge_snapshot", "merge_snapshot_mor", "delete_snapshot",
+     "delete_snapshot_mor", "delete_keys_mor", "optimize_snapshot"],
+)
+def test_former_reserved_column_names_round_trip(spark, sf_smoke, tmp_path, op):
+    """Columns named path, pos and _kind — the staging role columns before
+    they were namespaced — go through merge, delete, optimize, the change
+    feed and an MV keyed on ``path`` exactly like renamed columns do:
+    same rows, same change rows, same view, same commit shapes."""
+    got = _run_named_lifecycle(
+        spark, sf_smoke, tmp_path / "reserved", ["path", "pos", "_kind"], op
+    )
+    want = _run_named_lifecycle(
+        spark, sf_smoke, tmp_path / "renamed", ["c_path", "c_pos", "c_kind"], op
+    )
+    assert got == want
+    assert got[1], "the lifecycle must produce change rows"
+
+
+def test_legacy_deletion_vector_files_still_apply(spark, base, tmp_path):
+    """Tombstone files written before the role columns were namespaced keep
+    their (path, pos) columns — both the stage-*/ file holding only those
+    two columns and the stage-*/_kind=dv/ file of a multi-role superset.
+    Reads, a targeted optimize (which consolidates the surviving old
+    tombstones) and a further MoR delete must all agree with a table
+    written fresh without the dead rows."""
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from fxa_amplitude_send_spark.sinks.versioned import (
+        _commit,
+        _read_manifest,
+        delete_snapshot_mor,
+        optimize_snapshot,
+    )
+
+    path, fresh = str(tmp_path / "t"), str(tmp_path / "fresh")
+    write_snapshot(base.repartition(2), path)                      # v1
+    prev = _read_manifest(path, 1)
+    f0, f1 = [e["path"] for e in prev["files"]]
+    t0, t1 = (pq.read_table(os.path.join(path, f)) for f in (f0, f1))
+    dead0, dead1 = list(range(t0.num_rows // 2 + 1)), [0]
+
+    def tombstones(rel, positions):
+        return {"path": pa.array([rel] * len(positions), pa.string()),
+                "pos": pa.array(positions, pa.int64())}
+
+    # stage-*/ file with only (path, pos)
+    only = os.path.join("data", f"stage-{uuid.uuid4().hex}", "part-00000.parquet")
+    # stage-*/_kind=dv/ superset file: null table columns + _change_type
+    superset = os.path.join(
+        "data", f"stage-{uuid.uuid4().hex}", "_kind=dv", "part-00000.c000.snappy.parquet"
+    )
+    padding = {
+        f.name: pa.nulls(len(dead1), f.type) for f in t1.schema
+    } | {"_change_type": pa.nulls(len(dead1), pa.string())}
+    for rel, cols in [
+        (only, tombstones(f0, dead0)),
+        (superset, padding | tombstones(f1, dead1)),
+    ]:
+        os.makedirs(os.path.dirname(os.path.join(path, rel)))
+        pq.write_table(pa.table(cols), os.path.join(path, rel))
+    n_dead = len(dead0) + len(dead1)
+    _commit(path, prev["files"], prev["n_rows"] - n_dead, prev["schema"], 1,
+            appended=[], kind="delete", dvs=[only, superset])       # v2
+
+    dead_keys = [t0.column("n_nationkey")[i].as_py() for i in dead0] + [
+        t1.column("n_nationkey")[i].as_py() for i in dead1
+    ]
+    write_snapshot(base.filter(~F.col("n_nationkey").isin(dead_keys)), fresh)
+
+    def rows(p):
+        return sorted(tuple(r) for r in read_snapshot(spark, p).collect())
+
+    assert rows(path) == rows(fresh)
+    assert len(rows(path)) == base.count() - n_dead
+
+    # f0 is over half dead → rewritten; f1's superset tombstone survives and
+    # is consolidated into a namespaced tombstone file
+    assert optimize_snapshot(spark, path, dead_ratio=0.5) == 3
+    info = snapshot_info(path)
+    assert f0 not in [e["path"] for e in info["files"]]
+    assert f1 in [e["path"] for e in info["files"]]
+    (dv,) = info["dvs"]
+    assert pq.read_table(os.path.join(path, dv)).column_names == ["_vt_path", "_vt_pos"]
+    assert rows(path) == rows(fresh)
+
+    delete_snapshot_mor(spark, path, "n_nationkey % 3 = 0")
+    delete_snapshot_mor(spark, fresh, "n_nationkey % 3 = 0")
+    assert rows(path) == rows(fresh)

@@ -6,12 +6,13 @@ INTERLEAVED (A B A B ...) inside ONE SparkSession and reports per-variant
 min/median — the only defensible comparison regime on this box.
 
 Usage:
-  python tools/ab_timer.py QUERY[,QUERY...] ENVVAR=a|b[,ENVVAR2=...] [reps]
+  python tools/ab_timer.py QUERY[,QUERY...] [ENVVAR=a|b[,ENVVAR2=...]] [reps]
 
-Each variant spec is ENV assignments applied before the query function runs
-(query functions read the env at call time). Example:
+An optional variant spec is ENV assignments applied before each query
+function runs; without one every query runs as a single variant. Example
+(three queries interleaved, 6 reps each):
 
-  python tools/ab_timer.py q_stream_txn_merge SPARK_GRAFT_MOR_PERSIST=1|0 6
+  python tools/ab_timer.py q_versioned_txn_merge,q_mv_star,q_cdf_read "" 6
 """
 
 from __future__ import annotations
