@@ -10,6 +10,8 @@ and multi-probe (neighboring buckets).
 
 from __future__ import annotations
 
+from typing import Hashable
+
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -125,24 +127,6 @@ def _bucket_rerank(e: DataFrame, q: DataFrame, k: int, id_col: str) -> DataFrame
         e.groupBy("_t", "_b")
         .cogroup(q.groupBy("_t", "_b"))
         .applyInPandas(score, schema=f"query_id long, {id_col} long, cos_sim double")
-    )
-
-
-def brute_force_topk(
-    emb: DataFrame,
-    query: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_vec_col: str = "qvec",
-) -> DataFrame:
-    """Exact cosine top-k of ``emb`` against a single-row ``query`` frame."""
-    joined = emb.crossJoin(F.broadcast(query))
-    sim = cosine_similarity_col(F.col(vec_col), F.col(query_vec_col))
-    return (
-        joined.select(F.col(id_col), F.round(sim, 6).alias("cos_sim"))
-        .orderBy(F.col("cos_sim").desc(), F.col(id_col))
-        .limit(k)
     )
 
 
@@ -483,7 +467,7 @@ def build_ivf_index(
     spark,
     emb: DataFrame,
     centroids: list[list[float]],
-    sig: str,
+    sig: Hashable,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_buckets: int = 16,
@@ -494,9 +478,11 @@ def build_ivf_index(
     time, and every subsequent probe joins candidates by cell with NO
     shuffle and NO re-assignment of the corpus — write-amortized ANN
     serving, the same economics as sinks/bucketed.py's co-located joins.
-    At 100 TB the cell is the natural partition/bucket key; re-tag (sig)
-    when the corpus or quantizer changes. ``corpus_cells`` shares a
-    precomputed assignment pass (see ivf_topk)."""
+    At 100 TB the cell is the natural partition/bucket key. The index is
+    built once per (sig, Spark application) and dies with the process, so
+    ``sig`` must change whenever the corpus or quantizer can change within
+    one application. ``corpus_cells`` shares a precomputed assignment pass
+    (see ivf_topk)."""
     from ..sinks.bucketed import ensure_bucketed
 
     if corpus_cells is None:
@@ -515,7 +501,7 @@ def append_to_ivf_index(
     spark,
     new_emb: DataFrame,
     centroids: list[list[float]],
-    sig: str,
+    sig: Hashable,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_buckets: int = 16,

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from ..operators.event_pipeline import event_pipeline
 from ..sources import load_table
+from ..staging import source_identity, staged
 from .registry import query
 
 FLAGSHIP_HMAC_KEY = "spark-graft-flagship-key"
@@ -80,7 +81,7 @@ def synthesize_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def staged_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Materialize the synthesized payloads to a staging parquet (once per
-    sf_dir), then scan them back.
+    source file per process), then scan them back.
 
     Two reasons, both scale-relevant:
     * In the real architecture raw payloads ARE storage-resident (the
@@ -92,26 +93,17 @@ def staged_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
       onto the single-partition source scan (measured >10x slowdown).
       A storage boundary is the one barrier the optimizer always respects.
     """
-    import hashlib
-    import os
-    import tempfile
-
-    # The tag folds in the source parquet's (size, mtime) so a regenerated
-    # testdata directory invalidates the cache — a stale staged table under
-    # the same path is silent wrong-input, worse than a re-synthesis.
-    src = os.path.join(sf_dir, "events.parquet")
-    try:
-        st = os.stat(src)
-        src_sig = f"{st.st_size}:{st.st_mtime_ns}"
-    except OSError:
-        src_sig = "missing"
-    tag = hashlib.sha256(f"{sf_dir}|{src_sig}".encode()).hexdigest()[:12]
-    staging = os.path.join(tempfile.gettempdir(), f"fxa_spark_payloads_{tag}")
+    # Keyed on the source parquet's identity, so a regenerated testdata
+    # directory re-synthesizes: a stale staged table under the same path is
+    # silent wrong-input, worse than a re-synthesis.
     target = spark.sparkContext.defaultParallelism
-    if not os.path.exists(os.path.join(staging, "_SUCCESS")):
-        synthesize_payloads(spark, sf_dir).repartition(target).write.mode(
-            "overwrite"
-        ).parquet(staging)
+    staging = staged(
+        "payloads",
+        source_identity(sf_dir, "events"),
+        lambda path: synthesize_payloads(spark, sf_dir)
+        .repartition(target)
+        .write.parquet(path),
+    )
     return spark.read.parquet(staging)
 
 

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine_similarity_col
 from ..sources import load_table
+from ..staging import scratch, source_identity
 from .registry import query
 
 STOPWORDS = ("the", "a", "of", "to", "and")
@@ -1004,16 +1005,12 @@ def llm_sim_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # 4th path: the PERSISTED serving index (what production queries hit) —
     # measured directly, not merely asserted equal to the on-the-fly path
-    import os
-
     from ..operators.similarity import build_ivf_index, ivf_topk_served
 
-    try:
-        st = os.stat(os.path.join(sf_dir, "embeddings.parquet"))
-        sig = f"{sf_dir}|{st.st_size}:{st.st_mtime_ns}"
-    except OSError:
-        sig = f"{sf_dir}|missing"
-    index = build_ivf_index(spark, emb, centroids, sig=sig, corpus_cells=cells)
+    index = build_ivf_index(
+        spark, emb, centroids, sig=source_identity(sf_dir, "embeddings"),
+        corpus_cells=cells,
+    )
     served = ivf_topk_served(
         index, queries_df, centroids, k=5, n_probe=IVF_PARAMS["n_probe"],
         query_cells=qcells,
@@ -2020,8 +2017,6 @@ def llm_sim_ivf_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     the serving economics that matter at 100 TB: per-query cost is
     n_probe cells of candidates, zero corpus re-assignment, no shuffle on
     the index side."""
-    import os
-
     from ..operators.similarity import (
         build_ivf_index,
         ivf_topk_served,
@@ -2035,12 +2030,9 @@ def llm_sim_ivf_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids = train_ivf_centroids(
         emb, n_centroids=IVF_PARAMS["n_centroids"], n_iter=5, sample_n=512
     )
-    try:
-        st = os.stat(os.path.join(sf_dir, "embeddings.parquet"))
-        sig = f"{sf_dir}|{st.st_size}:{st.st_mtime_ns}"
-    except OSError:
-        sig = f"{sf_dir}|missing"
-    index = build_ivf_index(spark, emb, centroids, sig=sig)
+    index = build_ivf_index(
+        spark, emb, centroids, sig=source_identity(sf_dir, "embeddings")
+    )
     served = ivf_topk_served(
         index, queries_df, centroids, k=5, n_probe=IVF_PARAMS["n_probe"]
     )
@@ -2308,13 +2300,12 @@ def llm_ingest_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is the certification pattern of q_versioned_roundtrip applied to
     the ingestion machinery: the driver compare pins the lakehouse append,
     the LSH index round-trip, and the admission decisions together."""
-    from ..plans.sources_io import _work_root
     from ..sinks.versioned import read_snapshot
     from ..streaming.corpus_ingest import ingest_batch_neardup
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    table = _work_root("neardup_tbl", sf_dir)
-    index = _work_root("neardup_idx", sf_dir)
+    table = scratch("neardup_tbl", sf_dir)
+    index = scratch("neardup_idx", sf_dir)
 
     b1 = docs.filter(F.col("doc_id") < 200)
     n1 = ingest_batch_neardup(b1, table, index, "gate-1")

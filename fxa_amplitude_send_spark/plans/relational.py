@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources import load_table
+from ..staging import source_identity
 from .registry import query
 
 
@@ -2218,18 +2219,12 @@ def q_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB per run. Here the dim side is small enough that AQE may still
     choose broadcast (equally shuffle-free); the bucket-aligned SortMerge
     plan is pinned down in tests/test_plans.py with broadcast disabled.
-    The staged tables are tagged by the source parquet's (size, mtime), so
-    regenerated testdata re-buckets."""
-    import os
-
+    The bucketed copies are built once per process and keyed on the source
+    parquet's identity, so regenerated testdata re-buckets."""
     from ..sinks.bucketed import ensure_bucketed
 
     ev = _t(spark, sf_dir, "events").select("user_id", "value")
-    try:
-        st = os.stat(os.path.join(sf_dir, "events.parquet"))
-        sig = f"{sf_dir}|{st.st_size}:{st.st_mtime_ns}"
-    except OSError:
-        sig = f"{sf_dir}|missing"
+    sig = source_identity(sf_dir, "events")
     dim = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_events")).select(
         "user_id", "n_events", (F.col("user_id") % 10).alias("segment")
     )
@@ -2965,22 +2960,19 @@ def q_tpch_q18_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     an aggregate over a fact-sized bucketed scan would demote the join to
     a fact-sized SMJ — the hint states what the HAVING filter guarantees.
     8 buckets on test data; thousands (one bucket ≈ one task's memory) at
-    100 TB. The bucketed copy is tagged by the source parquet's
-    (size, mtime), so regenerated testdata re-buckets and repeat runs
-    reuse the write — exactly the amortization argument."""
-    import os
-
+    100 TB. The bucketed copy is keyed on the source parquet's identity,
+    so regenerated testdata re-buckets, and repeat runs in one process
+    reuse the write — the amortization argument, paid once per process
+    here (a production table would be written once and kept)."""
     from ..sinks.bucketed import ensure_bucketed
 
     c = _t(spark, sf_dir, "customer")
     o = _t(spark, sf_dir, "orders")
     l = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
-    try:
-        st = os.stat(os.path.join(sf_dir, "lineitem.parquet"))
-        sig = f"{sf_dir}|{st.st_size}:{st.st_mtime_ns}"
-    except OSError:
-        sig = f"{sf_dir}|missing"
-    bl = ensure_bucketed(spark, l, "lineitem_by_order", "l_orderkey", sig=sig)
+    bl = ensure_bucketed(
+        spark, l, "lineitem_by_order", "l_orderkey",
+        sig=source_identity(sf_dir, "lineitem"),
+    )
     big = (
         bl.groupBy("l_orderkey")
         .agg(F.sum("l_quantity").alias("_qty"))

@@ -7,8 +7,8 @@ gate, not just in pytest.
 Why aggregate instead of comparing raw rows: the gate then certifies both
 the adapter (sources/formats.py) and numeric fidelity (doubles survive the
 text formats via shortest-round-trip repr), while keeping result sets
-small. The staged copy is written once per (table, format, source mtime)
-and cached, so repeated runs only pay the readback.
+small. The staged copy is written once per (table, format, source file)
+per process, so repeated runs only pay the readback.
 """
 
 from __future__ import annotations
@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources import load_table, stage_roundtrip
+from ..staging import scratch, source_identity, staged
 from .registry import query
 
 
@@ -55,28 +56,6 @@ def _stream_partitions(spark: SparkSession):
             spark.conf.set("spark.sql.shuffle.partitions", saved)
 
     return _cm()
-
-
-def _work_root(kind: str, sf_dir: str) -> str:
-    """Fresh process-private scratch dir for the versioned-table round-trip
-    queries. The tag mixes a STABLE hashlib digest of sf_dir — not Python's
-    per-process-salted ``hash()`` — with pid and thread id, so two
-    concurrent harnesses (separate processes, or threads inside one) can
-    never share a root and ``rmtree`` each other's half-written state.
-    Serial reruns in one thread reuse (and first clear) the same dir, so
-    /tmp stays bounded across bench loops."""
-    import hashlib
-    import shutil
-    import tempfile
-    import threading
-
-    digest = hashlib.sha256(os.path.abspath(sf_dir).encode("utf-8")).hexdigest()[:12]
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"fxa_spark_{kind}_{digest}_{os.getpid()}_{threading.get_ident()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
-    return root
 
 
 @query(
@@ -170,7 +149,7 @@ def q_source_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_source_binaryfile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """binaryFile source — Spark's ingestion door for raw media/file
     corpora (image dirs, audio dumps, crawled HTML): every 20th document's
-    UTF-8 bytes are staged as one file per doc (once per source mtime),
+    UTF-8 bytes are staged as one file per doc (once per source file),
     read back via ``format("binaryFile")`` (path, modificationTime,
     length, content), and fingerprinted; the oracle computes the same
     byte length + SHA-256 from the documents table, proving byte-lossless
@@ -178,20 +157,9 @@ def q_source_binaryfile(spark: SparkSession, sf_dir: str) -> DataFrame:
     keying opaque files — recovered with regexp_extract on the path
     column. At 100 TB binaryFile scans parallelize per-file and feed the
     multimodal decode operators (operators/multimodal.py) directly."""
-    import hashlib
-    import os
-    import tempfile
 
-    src_file = os.path.join(sf_dir, "documents.parquet")
-    try:
-        st = os.stat(src_file)
-        sig = f"{st.st_size}:{st.st_mtime_ns}"
-    except OSError:
-        sig = "missing"
-    tag = hashlib.sha256(f"{sf_dir}|binaryfile|{sig}".encode()).hexdigest()[:12]
-    staging = os.path.join(tempfile.gettempdir(), f"fxa_spark_binfiles_{tag}")
-    if not os.path.exists(os.path.join(staging, "_DONE")):
-        os.makedirs(staging, exist_ok=True)
+    def build(staging: str) -> None:
+        os.makedirs(staging)
         docs = (
             load_table(spark, sf_dir, "documents")
             .filter(F.col("doc_id") % 20 == 0)
@@ -203,8 +171,8 @@ def q_source_binaryfile(spark: SparkSession, sf_dir: str) -> DataFrame:
                 os.path.join(staging, f"doc-{row['doc_id']:08d}.bin"), "wb"
             ) as fh:
                 fh.write(row["text"].encode("utf-8"))
-        with open(os.path.join(staging, "_DONE"), "w") as fh:
-            fh.write("ok")
+
+    staging = staged("binfiles", source_identity(sf_dir, "documents"), build)
     back = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.bin")
@@ -240,21 +208,10 @@ def q_source_json_badrecords(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the events table and pins the corrupt count. DROPMALFORMED /
     FAILFAST behaviors on the same feed are pytest-checked
     (tests/test_sources.py)."""
-    import hashlib
     import json
-    import os
-    import tempfile
 
-    src_file = os.path.join(sf_dir, "events.parquet")
-    try:
-        st = os.stat(src_file)
-        sig = f"{st.st_size}:{st.st_mtime_ns}"
-    except OSError:
-        sig = "missing"
-    tag = hashlib.sha256(f"{sf_dir}|badjson|{sig}".encode()).hexdigest()[:12]
-    staging = os.path.join(tempfile.gettempdir(), f"fxa_spark_badjson_{tag}")
-    if not os.path.exists(os.path.join(staging, "_DONE")):
-        os.makedirs(staging, exist_ok=True)
+    def build(staging: str) -> None:
+        os.makedirs(staging)
         good = (
             load_table(spark, sf_dir, "events")
             .filter(F.col("event_id") % 100 == 0)
@@ -286,8 +243,8 @@ def q_source_json_badrecords(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             for line in corrupt_lines:
                 fh.write(line + "\n")
-        with open(os.path.join(staging, "_DONE"), "w") as fh:
-            fh.write("ok")
+
+    staging = staged("badjson", source_identity(sf_dir, "events"), build)
     back = (
         spark.read.schema(
             "event_id long, event_type string, user_id long, value double,"
@@ -336,7 +293,7 @@ def q_versioned_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
-    table = _work_root("vtable", sf_dir)
+    table = scratch("vtable", sf_dir)
     write_snapshot(ev.filter(F.col("event_id") % 2 == 0), table)
     append_snapshot(ev.filter(F.col("event_id") % 2 == 1), table)
     compact_snapshot(spark, table, target_files=4)
@@ -372,7 +329,7 @@ def q_versioned_timetravel(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
-    table = _work_root("vtravel", sf_dir)
+    table = scratch("vtravel", sf_dir)
     write_snapshot(ev.filter(F.col("event_id") % 2 == 0), table)     # v1
     append_snapshot(ev.filter(F.col("event_id") % 2 == 1), table)    # v2
     delete_snapshot(spark, table, "value < 50")                      # v3
@@ -418,8 +375,8 @@ def q_mv_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
-    base = _work_root("mvbase", sf_dir)
-    mv = _work_root("mv", sf_dir)
+    base = scratch("mvbase", sf_dir)
+    mv = scratch("mv", sf_dir)
     write_snapshot(ev.filter(F.col("event_id") % 2 == 0), base)  # v1
     create_mv(spark, base, mv, keys=["event_type"], sums=["value"])
     append_snapshot(ev.filter(F.col("event_id") % 2 == 1), base)  # v2
@@ -470,8 +427,8 @@ def q_mv_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
-    base = _work_root("mmbase", sf_dir)
-    mv = _work_root("mmmv", sf_dir)
+    base = scratch("mmbase", sf_dir)
+    mv = scratch("mmmv", sf_dir)
     write_snapshot(ev.filter(F.col("event_id") % 2 == 0), base)   # v1
     create_mv(
         spark, base, mv, keys=["event_type"], sums=[],
@@ -534,9 +491,9 @@ def q_mv_join_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("custkey"), "c_mktsegment"
     )
-    fp = _work_root("jmvf", sf_dir)
-    dp = _work_root("jmvd", sf_dir)
-    mv = _work_root("jmv", sf_dir)
+    fp = scratch("jmvf", sf_dir)
+    dp = scratch("jmvd", sf_dir)
+    mv = scratch("jmv", sf_dir)
     write_snapshot(orders.filter(F.col("o_orderkey") % 2 == 0), fp)  # f v1
     write_snapshot(cust, dp)                                         # d v1
     create_join_mv(
@@ -598,9 +555,9 @@ def q_mv_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.round(F.col("value") * 100).cast("long").alias("value_c"),
     )
-    base = _work_root("chbase", sf_dir)
-    mv1 = _work_root("chmv1", sf_dir)
-    mv2 = _work_root("chmv2", sf_dir)
+    base = scratch("chbase", sf_dir)
+    mv1 = scratch("chmv1", sf_dir)
+    mv2 = scratch("chmv2", sf_dir)
     write_snapshot(ev.filter(F.col("event_id") % 2 == 0), base)      # v1
     create_mv(spark, base, mv1, keys=["event_type", "bucket"], sums=["value_c"])
     create_mv(spark, mv1, mv2, keys=["event_type"], sums=["mv_count", "sum_value_c"])
@@ -675,10 +632,10 @@ def q_mv_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("nationkey"), "n_name", "n_regionkey"
     )
-    fp = _work_root("smvf", sf_dir)
-    cp = _work_root("smvc", sf_dir)
-    np_ = _work_root("smvn", sf_dir)
-    mv = _work_root("smv", sf_dir)
+    fp = scratch("smvf", sf_dir)
+    cp = scratch("smvc", sf_dir)
+    np_ = scratch("smvn", sf_dir)
+    mv = scratch("smv", sf_dir)
     write_snapshot(orders.filter(F.col("o_orderkey") % 2 == 0), fp)  # f v1
     write_snapshot(cust, cp)                                         # c v1
     write_snapshot(nation, np_)                                      # n v1
@@ -745,8 +702,8 @@ def q_mv_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("event_id") % 3).alias("bucket"),
         F.round(F.col("value") * 100).cast("long").alias("value_c"),
     )
-    base = _work_root("rwbase", sf_dir)
-    mv = _work_root("rwmv", sf_dir)
+    base = scratch("rwbase", sf_dir)
+    mv = scratch("rwmv", sf_dir)
     write_snapshot(ev.filter(F.col("event_id") % 2 == 0), base)   # v1
     create_mv(
         spark, base, mv,
@@ -819,9 +776,9 @@ def q_mv_rewrite_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("custkey"), "c_mktsegment"
     )
-    fp = _work_root("rwjf", sf_dir)
-    dp = _work_root("rwjd", sf_dir)
-    mv = _work_root("rwjmv", sf_dir)
+    fp = scratch("rwjf", sf_dir)
+    dp = scratch("rwjd", sf_dir)
+    mv = scratch("rwjmv", sf_dir)
     write_snapshot(orders.filter(F.col("o_orderkey") % 2 == 0), fp)   # f v1
     write_snapshot(cust, dp)                                          # d v1
     create_join_mv(
@@ -876,7 +833,7 @@ def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.round(F.col("value") * 100).cast("long").alias("value_c"),
     )
-    stage = _work_root("strm_src", sf_dir)
+    stage = scratch("strm_src", sf_dir)
     ev.repartition(4).write.parquet(stage)
     schema = spark.read.parquet(stage).schema
     sink = "strm_sink_" + os.path.basename(stage).rsplit("_", 2)[0][10:]
@@ -985,7 +942,7 @@ def q_stream_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     if n_late_groups == 0:
         raise RuntimeError("q_stream_late: no stragglers engineered; vacuous")
-    stage = _work_root("strm_late", sf_dir)
+    stage = scratch("strm_late", sf_dir)
     os.makedirs(stage)
     tmp = stage + "_tmp"
     base = _time.time() - 4000  # mtimes strictly increasing, all in the past
@@ -1102,9 +1059,9 @@ def q_mv_star_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("event_type").isin("click", "view"), F.lit("passive")
         ).otherwise(F.lit("active")),
     )
-    fp = _work_root("smmf", sf_dir)
-    dp = _work_root("smmd", sf_dir)
-    mv = _work_root("smmv", sf_dir)
+    fp = scratch("smmf", sf_dir)
+    dp = scratch("smmd", sf_dir)
+    mv = scratch("smmv", sf_dir)
     write_snapshot(ev.filter(F.col("event_id") % 2 == 0), fp)   # f v1
     write_snapshot(dim, dp)                                     # d v1
     create_star_mv(
@@ -1166,8 +1123,8 @@ def q_mv_rewrite_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("event_id") % 3).alias("bucket"),
         F.round(F.col("value") * 100).cast("long").alias("value_c"),
     )
-    base = _work_root("rrbase", sf_dir)
-    mv = _work_root("rrmv", sf_dir)
+    base = scratch("rrbase", sf_dir)
+    mv = scratch("rrmv", sf_dir)
     write_snapshot(ev.filter(F.col("event_id") % 2 == 0), base)   # v1
     create_mv(spark, base, mv, keys=["event_type", "bucket"], sums=["value_c"])
     append_snapshot(ev.filter(F.col("event_id") % 2 == 1), base)  # v2
@@ -1242,8 +1199,8 @@ def q_mv_rewrite_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderpriority",
         F.round(F.col("o_totalprice") * 100).cast("long").alias("price_c"),
     )
-    base = _work_root("rcbase", sf_dir)
-    mv = _work_root("rcmv", sf_dir)
+    base = scratch("rcbase", sf_dir)
+    mv = scratch("rcmv", sf_dir)
     write_snapshot(orders.filter(F.col("o_orderkey") % 2 == 0), base)   # v1
     create_mv(
         spark, base, mv,
@@ -1331,8 +1288,8 @@ def q_mv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_custkey",
         F.round(F.col("o_totalprice") * 100).cast("long").alias("price_c"),
     )
-    base = _work_root("ndbase", sf_dir)
-    mv = _work_root("ndmv", sf_dir)
+    base = scratch("ndbase", sf_dir)
+    mv = scratch("ndmv", sf_dir)
     write_snapshot(orders.filter(F.col("o_orderkey") % 2 == 0), base)   # v1
     create_mv(
         spark, base, mv, keys=["o_orderstatus"], sums=["price_c"],
@@ -1382,7 +1339,7 @@ def q_check_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "event_type", "value"
     )
     ok = ev.filter(F.col("value") >= 0)
-    table = _work_root("ckc", sf_dir)
+    table = scratch("ckc", sf_dir)
     write_snapshot(ok.filter(F.col("event_id") % 2 == 0), table)  # v1
     add_check_constraint(spark, table, "value_nonneg", "value >= 0")
     bad = ev.withColumn("value", F.col("value") - F.lit(10000.0))
@@ -1436,8 +1393,8 @@ def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts",
         F.round(F.col("value") * 100).cast("long").alias("value_c"),
     )
-    c_dir = _work_root("sjc", sf_dir)
-    p_dir = _work_root("sjp", sf_dir)
+    c_dir = scratch("sjc", sf_dir)
+    p_dir = scratch("sjp", sf_dir)
     clicks.repartition(2).write.parquet(c_dir)
     purch.repartition(2).write.parquet(p_dir)
     # watermarks demand TIMESTAMP, the data is NTZ: interpret the wall
@@ -1539,8 +1496,8 @@ def q_stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts",
         F.round(F.col("value") * 100).cast("long").alias("value_c"),
     )
-    c_dir = _work_root("sjoc", sf_dir)
-    p_dir = _work_root("sjop", sf_dir)
+    c_dir = scratch("sjoc", sf_dir)
+    p_dir = scratch("sjop", sf_dir)
     clicks.repartition(2).write.parquet(c_dir)
     purch.repartition(2).write.parquet(p_dir)
     as_instant = lambda df: df.withColumn(  # noqa: E731
@@ -1636,7 +1593,7 @@ def q_cdf_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.round(F.col("value") * 100).cast("long").alias("value_c"),
     )
-    table = _work_root("cdf", sf_dir)
+    table = scratch("cdf", sf_dir)
     write_snapshot(ev.filter(F.col("event_id") % 2 == 0), table)    # v1
     migrated = (
         load_table(spark, sf_dir, "events")
@@ -1685,7 +1642,7 @@ def q_versioned_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
-    table = _work_root("vbloom", sf_dir)
+    table = scratch("vbloom", sf_dir)
     n = ev.count()
     n_files = max(8, n // 8000)
     set_bloom_policy(table, ["event_id"], bits=131072, k=5)
@@ -1746,7 +1703,7 @@ def q_source_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.round(F.col("value") * 100).cast("long").alias("value_c"),
     )
-    root = _work_root("part_src", sf_dir)
+    root = scratch("part_src", sf_dir)
     write_partitioned(ev, root, ["event_type"])
     parts = []
     for etype in ["purchase", "error"]:
@@ -1807,13 +1764,13 @@ def q_stream_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.round(F.col("value") * 100).cast("long").alias("value_c"),
     )
-    stage = _work_root("strm_txn", sf_dir)
+    stage = scratch("strm_txn", sf_dir)
     ev.repartition(4).write.parquet(stage)
     schema = spark.read.parquet(stage).schema
 
-    fact = _work_root("stxf", sf_dir)
-    summ = _work_root("stxs", sf_dir)
-    troot = _work_root("stxl", sf_dir)
+    fact = scratch("stxf", sf_dir)
+    summ = scratch("stxs", sf_dir)
+    troot = scratch("stxl", sf_dir)
     empty = ev.filter(F.lit(False))
     write_snapshot(empty, fact)                                     # v1
     write_snapshot(
@@ -1850,10 +1807,10 @@ def q_stream_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(stage)
         .writeStream.foreachBatch(process)
-        # the checkpoint must live in its own _work_root: a bare sibling
+        # the checkpoint must live in its own scratch dir: a bare sibling
         # path ("stage_ckpt") survives in-session reruns, so batch ids
         # resume at 4 and the replay probe's batch 0 never exists
-        .option("checkpointLocation", _work_root("strm_txn_ckpt", sf_dir))
+        .option("checkpointLocation", scratch("strm_txn_ckpt", sf_dir))
         .trigger(availableNow=True)
         .start()
     )
@@ -1929,7 +1886,7 @@ def q_stream_txn_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.round(F.col("value") * 100).cast("long").alias("value_c"),
     )
-    stage = _work_root("strm_txm", sf_dir)
+    stage = scratch("strm_txm", sf_dir)
     # The 4 CDC batches partition/derive from ONE events pass: every row
     # belongs to exactly one insert batch (event_id parity) and the
     # event_id%4==0 rows additionally to one doubled update batch — so one
@@ -1972,7 +1929,16 @@ def q_stream_txn_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     now = None
     for i in range(4):
         sub = _os.path.join(tmp, f"_b={i}")
-        part = [f for f in _os.listdir(sub) if f.endswith(".parquet")][0]
+        parts = sorted(_os.listdir(sub)) if _os.path.isdir(sub) else []
+        part = next((f for f in parts if f.endswith(".parquet")), None)
+        if part is None:
+            # the gate's contract is one CDC transaction per batch; an empty
+            # batch would replay as a missing micro-batch, so say which one
+            raise ValueError(
+                f"q_stream_txn_merge: CDC batch {i} is empty for {sf_dir!r} "
+                "(batches 0/1 take even/odd event_id, batches 2/3 take "
+                "event_id % 8 == 0/4); every batch needs at least one row"
+            )
         dst = _os.path.join(stage, f"b{i}.parquet")
         _os.rename(_os.path.join(sub, part), dst)
         # updates reference insert-batch keys, so arrival ORDER is part of
@@ -1983,9 +1949,9 @@ def q_stream_txn_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     _shutil.rmtree(tmp)  # the file source must see exactly 4 flat files
     schema = spark.read.parquet(_os.path.join(stage, "b0.parquet")).schema
 
-    fact = _work_root("stxmf", sf_dir)
-    summ = _work_root("stxms", sf_dir)
-    troot = _work_root("stxml", sf_dir)
+    fact = scratch("stxmf", sf_dir)
+    summ = scratch("stxms", sf_dir)
+    troot = scratch("stxml", sf_dir)
     empty = ev.filter(F.lit(False))
     write_snapshot(empty, fact)                                     # v1
     write_snapshot(
@@ -2041,7 +2007,7 @@ def q_stream_txn_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("latestFirst", "false")
         .parquet(stage)
         .writeStream.foreachBatch(process)
-        .option("checkpointLocation", _work_root("strm_txm_ckpt", sf_dir))
+        .option("checkpointLocation", scratch("strm_txm_ckpt", sf_dir))
         .trigger(availableNow=True)
         .start()
     )
@@ -2119,7 +2085,7 @@ def q_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         F.round(F.col("value") * 100).cast("long").alias("cents"),
     )
-    stage = _work_root("strm_state", sf_dir)
+    stage = scratch("strm_state", sf_dir)
     ev.repartition(4).write.parquet(stage)
     schema = spark.read.parquet(stage).schema
 
@@ -2212,9 +2178,9 @@ def q_versioned_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.round(F.col("value") * 100).cast("long").alias("value_c"),
     )
-    fact = _work_root("txnf", sf_dir)
-    summ = _work_root("txns", sf_dir)
-    troot = _work_root("txnl", sf_dir)
+    fact = scratch("txnf", sf_dir)
+    summ = scratch("txns", sf_dir)
+    troot = scratch("txnl", sf_dir)
     first = ev.filter(F.col("event_id") % 2 == 0)
     write_snapshot(first, fact)                                      # v1
     write_snapshot(
@@ -2311,9 +2277,9 @@ def q_versioned_txn_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.round(F.col("value") * 100).cast("long").alias("value_c"),
     )
-    fact = _work_root("txncf", sf_dir)
-    dim = _work_root("txncd", sf_dir)
-    troot = _work_root("txncl", sf_dir)
+    fact = scratch("txncf", sf_dir)
+    dim = scratch("txncd", sf_dir)
+    troot = scratch("txncl", sf_dir)
     base = ev.filter(F.col("event_id") % 3 == 0)
     write_snapshot(base, fact)                                       # v1
     write_snapshot(base, dim)                                        # v1
@@ -2390,9 +2356,9 @@ def q_versioned_txn_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.round(F.col("value") * 100).cast("long").alias("value_c"),
     )
-    fact = _work_root("txmf", sf_dir)
-    summ = _work_root("txms", sf_dir)
-    troot = _work_root("txml", sf_dir)
+    fact = scratch("txmf", sf_dir)
+    summ = scratch("txms", sf_dir)
+    troot = scratch("txml", sf_dir)
     first = ev.filter(F.col("event_id") % 2 == 0)
     write_snapshot(first, fact)                                      # v1
     write_snapshot(
@@ -2545,7 +2511,7 @@ def q_versioned_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", F.round("value", 2).alias("value_r")
     )
-    table = _work_root("vzorder", sf_dir)
+    table = scratch("vzorder", sf_dir)
     n, max_e, max_u = ev.agg(
         F.count(F.lit(1)), F.max("event_id"), F.max("user_id")
     ).first()
@@ -2616,7 +2582,7 @@ def q_versioned_mor_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
-    table = _work_root("vmor", sf_dir)
+    table = scratch("vmor", sf_dir)
     write_snapshot(ev.repartition(8), table)
     v1_files = [e["path"] for e in snapshot_info(table, 1)["files"]]
     delete_snapshot_mor(spark, table, "value >= 80")
@@ -2674,7 +2640,7 @@ def q_versioned_mor_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
-    table = _work_root("vmorm", sf_dir)
+    table = scratch("vmorm", sf_dir)
     write_snapshot(ev.repartition(8), table)
     v1_files = [e["path"] for e in snapshot_info(table, 1)["files"]]
     upd = (
@@ -2751,7 +2717,7 @@ def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts",
         F.round(F.col("value") * 100).cast("long").alias("value_c"),
     )
-    stage = _work_root("strm_sess_src", sf_dir)
+    stage = scratch("strm_sess_src", sf_dir)
     ev.repartition(4).write.parquet(stage)
     schema = spark.read.parquet(stage).schema
     # Complete-mode output goes to PARQUET via foreachBatch overwrite (last
@@ -2759,7 +2725,7 @@ def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     # means the full answer is corpus-sized — a memory sink holds it on the
     # driver heap and fell over at sf1 under an untuned 1 GiB driver. Disk
     # scales; the driver never materializes the result.
-    sink_dir = _work_root("strm_sess_sink", sf_dir)
+    sink_dir = scratch("strm_sess_sink", sf_dir)
 
     def _overwrite(batch_df, batch_id):
         batch_df.write.mode("overwrite").parquet(sink_dir)
@@ -2827,7 +2793,7 @@ def q_versioned_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
-    table = _work_root("vopt", sf_dir)
+    table = scratch("vopt", sf_dir)
     write_snapshot(ev.repartition(8), table)
     delete_snapshot_mor(spark, table, "event_id % 4 = 1")   # ~25% dead/file
     v3 = optimize_snapshot(spark, table, dead_ratio=0.2, target_files=4)
@@ -2877,8 +2843,8 @@ def q_versioned_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
-    src = _work_root("vclone_src", sf_dir)
-    dst = _work_root("vclone_dst", sf_dir)
+    src = scratch("vclone_src", sf_dir)
+    dst = scratch("vclone_dst", sf_dir)
     write_snapshot(ev.repartition(8), src)
     delete_snapshot_mor(spark, src, "event_id % 6 = 2")
     clone_snapshot(src, dst)
@@ -2920,7 +2886,7 @@ def q_versioned_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
-    table = _work_root("vrestore", sf_dir)
+    table = scratch("vrestore", sf_dir)
     write_snapshot(ev.filter(F.col("event_id") % 2 == 0), table)   # v1
     append_snapshot(ev.filter(F.col("event_id") % 2 == 1), table)  # v2: bad
     v3 = restore_snapshot(table, 1)
@@ -2982,7 +2948,7 @@ def q_versioned_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
-    table = _work_root("vvacuum", sf_dir)
+    table = scratch("vvacuum", sf_dir)
     write_snapshot(ev.repartition(8), table)              # v1: 8 files
     delete_snapshot_mor(spark, table, "event_id % 5 = 3")  # v2: DVs live
     compact_snapshot(spark, table, target_files=2)        # v3: fresh files
@@ -3063,7 +3029,7 @@ def q_versioned_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = load_table(spark, sf_dir, "events")
-    table = _work_root("vevolve", sf_dir)
+    table = scratch("vevolve", sf_dir)
     write_snapshot(
         ev.filter(F.col("event_id") % 2 == 0).select("event_id", "value"), table
     )
@@ -3113,7 +3079,7 @@ def q_versioned_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
-    table = _work_root("verasure", sf_dir)
+    table = scratch("verasure", sf_dir)
     write_snapshot(ev.repartition(8), table)
     v1_files = [e["path"] for e in snapshot_info(table, 1)["files"]]
     erase = ev.filter(F.col("user_id") % 37 == 5).select("user_id")
@@ -3156,12 +3122,12 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.round(F.col("value") * 100).cast("long").alias("value_c"),
     )
-    stage = _work_root("strm_dedup_src", sf_dir)
+    stage = scratch("strm_dedup_src", sf_dir)
     ev.repartition(2).write.parquet(stage)
     ev.repartition(2).write.mode("append").parquet(stage)  # exact duplicates
     schema = spark.read.parquet(stage).schema
 
-    sink_dir = _work_root("strm_dedup_sink", sf_dir)
+    sink_dir = scratch("strm_dedup_sink", sf_dir)
 
     def _append(batch_df, batch_id):
         batch_df.write.mode("append").parquet(sink_dir)
@@ -3228,12 +3194,12 @@ def q_stream_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.round(F.col("value") * 100).cast("long").alias("value_c"),
     )
-    stage = _work_root("strm_mv_src", sf_dir)
+    stage = scratch("strm_mv_src", sf_dir)
     ev.repartition(4).write.parquet(stage)
     schema = spark.read.parquet(stage).schema
 
-    table = _work_root("strm_mv_base", sf_dir)
-    mv = _work_root("strm_mv_view", sf_dir)
+    table = scratch("strm_mv_base", sf_dir)
+    mv = scratch("strm_mv_view", sf_dir)
 
     def _ingest(batch_df, batch_id):
         # append-then-refresh: the refresh reads only the committed change

@@ -8,6 +8,11 @@ write-amortized answer to "this join shuffles 100 TB every night".
 explicit LOCATION so it works in any caller-provided SparkSession
 (driver contract: no builder confs, no warehouse assumption).
 
+The files live under the process's staging root (``staging.staged``) and
+the catalog entry lives as long as the Spark application, so the write is
+paid once per (table, key, n_buckets, sig) per application; a new process
+or application rewrites it.
+
 Scale notes: bucket count should be sized so one bucket ≈ one task's
 memory budget at the target scale (here 8 for test data; thousands at
 100 TB). Both join sides must agree on (key, bucket count) — Spark then
@@ -18,10 +23,16 @@ Exchange (asserted in tests/test_plans.py).
 from __future__ import annotations
 
 import hashlib
-import os
-import tempfile
+from typing import Hashable
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..staging import staged
+
+
+def _catalog_name(table: str, key: str, n_buckets: int, sig: Hashable) -> str:
+    tag = hashlib.sha256(repr((table, key, n_buckets, sig)).encode()).hexdigest()[:12]
+    return f"{table}_{tag}"
 
 
 def ensure_bucketed(
@@ -30,36 +41,23 @@ def ensure_bucketed(
     table: str,
     key: str,
     n_buckets: int = 8,
-    sig: str = "",
+    sig: Hashable = "",
 ) -> DataFrame:
     """Write ``df`` as a bucketed+sorted parquet table (once per (table,
-    sig) per filesystem; once per session for the catalog entry) and return
-    the catalog-backed DataFrame whose scans carry the bucketing spec."""
+    key, n_buckets, sig) per Spark application) and return the
+    catalog-backed DataFrame whose scans carry the bucketing spec. ``sig``
+    must change whenever ``df``'s content can (e.g.
+    ``staging.source_identity`` of its source tables)."""
     from .parquet_layout import write_bucketed_table
 
-    tag = hashlib.sha256(f"{table}|{key}|{n_buckets}|{sig}".encode()).hexdigest()[:12]
-    name = f"{table}_{tag}"
-    location = os.path.join(tempfile.gettempdir(), f"fxa_spark_bucketed_{name}")
-    if not spark.catalog.tableExists(name):
-        if os.path.exists(os.path.join(location, "_SUCCESS")):
-            # files from a previous process are complete (the committer's
-            # _SUCCESS marker): re-REGISTER the bucketed layout over them
-            # instead of rewriting — the write really is paid once per
-            # (table, sig) per filesystem, not once per session. The DDL's
-            # CLUSTERED BY carries the same bucket spec the writer used,
-            # so scans keep their exchange-free distribution.
-            ddl = ", ".join(
-                f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields
-            )
-            spark.sql(
-                f"CREATE TABLE {name} ({ddl}) USING parquet "
-                f"CLUSTERED BY ({key}) SORTED BY ({key}) "
-                f"INTO {n_buckets} BUCKETS LOCATION '{location}'"
-            )
-        else:
-            write_bucketed_table(
-                df, name, key, n_buckets=n_buckets, sort_col=key, location=location
-            )
+    name = _catalog_name(table, key, n_buckets, sig)
+    staged(
+        "bucketed",
+        (spark.sparkContext.applicationId, name),
+        lambda location: write_bucketed_table(
+            df, name, key, n_buckets=n_buckets, sort_col=key, location=location
+        ),
+    )
     return spark.table(name)
 
 
@@ -69,7 +67,7 @@ def append_bucketed(
     table: str,
     key: str,
     n_buckets: int = 8,
-    sig: str = "",
+    sig: Hashable = "",
 ) -> DataFrame:
     """Append ``df`` to an existing bucketed table written by
     :func:`ensure_bucketed` (same (table, key, n_buckets, sig) → same
@@ -80,13 +78,10 @@ def append_bucketed(
     write-amortized contract: appending N rows costs O(N) assignment +
     write, never a rewrite of the existing table. Returns the catalog
     DataFrame over base + appended rows."""
-    tag = hashlib.sha256(f"{table}|{key}|{n_buckets}|{sig}".encode()).hexdigest()[:12]
-    name = f"{table}_{tag}"
+    name = _catalog_name(table, key, n_buckets, sig)
     if not spark.catalog.tableExists(name):
         # first write: identical to ensure_bucketed
-        return ensure_bucketed(
-            spark, df, table, key, n_buckets=n_buckets, sig=sig
-        )
+        return ensure_bucketed(spark, df, table, key, n_buckets=n_buckets, sig=sig)
     (
         df.write.mode("append")
         .format("parquet")

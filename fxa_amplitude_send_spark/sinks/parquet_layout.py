@@ -91,7 +91,8 @@ def write_bucketed_table(
     shuffle. n_buckets should divide evenly into the cluster's parallelism.
     Pass ``location`` to pin the files outside the warehouse dir (required
     under a caller-provided session with no warehouse assumption — see
-    sinks/bucketed.ensure_bucketed, which adds staging reuse on top)."""
+    sinks/bucketed.ensure_bucketed, which adds once-per-application reuse
+    on top)."""
     writer = df.write.mode("overwrite").format("parquet").bucketBy(n_buckets, bucket_col)
     if sort_col:
         writer = writer.sortBy(sort_col)

@@ -19,12 +19,9 @@ default parallelism so file counts stay bounded.
 
 from __future__ import annotations
 
-import hashlib
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 
+from ..staging import source_identity, staged
 from .tables import load_table
 
 _FORMATS = ("csv", "json", "orc")
@@ -62,32 +59,27 @@ def read_as(
 def stage_roundtrip(
     spark: SparkSession, sf_dir: str, table: str, fmt: str
 ) -> DataFrame:
-    """Write `table` once to /tmp in `fmt`, then read it back via `read_as`
-    with the original schema. The staging tag folds in the source parquet's
-    (size, mtime) so regenerated testdata invalidates the cache (same
-    discipline as plans/flagship.py's payload staging)."""
+    """Write `table` once per process in `fmt`, then read it back via
+    `read_as` with the original schema. Keyed on the source parquet's
+    identity, so regenerated testdata re-stages (same discipline as
+    plans/flagship.py's payload staging)."""
     src = load_table(spark, sf_dir, table)
-    src_file = os.path.join(sf_dir, f"{table}.parquet")
-    try:
-        st = os.stat(src_file)
-        sig = f"{st.st_size}:{st.st_mtime_ns}"
-    except OSError:
-        sig = "missing"
-    tag = hashlib.sha256(f"{sf_dir}|{table}|{fmt}|{sig}".encode()).hexdigest()[:12]
-    staging = os.path.join(tempfile.gettempdir(), f"fxa_spark_src_{fmt}_{tag}")
-    if not os.path.exists(os.path.join(staging, "_SUCCESS")):
-        writer = src.write.mode("overwrite")
+
+    def build(path: str) -> None:
+        writer = src.write
         if fmt == "csv":
             # Spark writes doubles via shortest-round-trip repr (Java
             # Double.toString), so numeric round-trips are lossless; header
             # carries names, quoting covers embedded delimiters.
             writer.option("header", "true").option(
                 "timestampNTZFormat", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"
-            ).csv(staging)
+            ).csv(path)
         elif fmt == "json":
             writer.option(
                 "timestampNTZFormat", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"
-            ).json(staging)
+            ).json(path)
         else:
-            writer.orc(staging)
+            writer.orc(path)
+
+    staging = staged(f"src_{fmt}", source_identity(sf_dir, table), build)
     return read_as(spark, staging, fmt, schema=src.schema)

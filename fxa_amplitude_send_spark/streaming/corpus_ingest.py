@@ -34,10 +34,6 @@ from pyspark.sql import functions as F
 from ..sinks.versioned import append_snapshot_idempotent
 
 
-def _fingerprints(docs: DataFrame) -> DataFrame:
-    return docs.select(F.sha2(F.col("text"), 256).alias("fingerprint"))
-
-
 def ingest_batch(
     batch_docs: DataFrame, table_path: str, index_path: str, txn_id: str
 ) -> int:
@@ -103,16 +99,19 @@ def ingest_batch_neardup(
     ``threshold``) duplicate of anything previously ingested, or of an
     earlier-keyed doc in the same batch.
 
-    The persisted index is the LSH decomposition of every admitted doc:
+    The persisted index is the LSH decomposition of every admitted doc,
+    both roles in one ``_kind``-partitioned dataset:
 
-        <index>/bands/  (fingerprint, band, bhash)   band keys ONLY — the
-                                                     join side; 8 small rows
-                                                     per doc, hash-partitioned
-                                                     by (band, bhash)
-        <index>/sigs/   (fingerprint, sig)           one 64-long signature
-                                                     per doc — fetched only
-                                                     for band-colliding
-                                                     candidates
+        <index>/parts/_kind=bands/  (fingerprint, band, bhash)   band keys
+                                    ONLY — the join side; 8 small rows per
+                                    doc, joined on (band, bhash)
+        <index>/parts/_kind=sigs/   (fingerprint, sig)   one 64-long
+                                    signature per doc — fetched only for
+                                    band-colliding candidates
+
+    An index in the older ``<index>/bands`` + ``<index>/sigs`` layout is
+    refused with a ``ValueError``: read as "no history" it would re-admit
+    every near-duplicate of the documents it records.
 
     Per batch the history check is: batch bands ⋈ index bands on
     (band, bhash) → candidate pairs (expected O(near-dup pairs), never
@@ -145,6 +144,17 @@ def ingest_batch_neardup(
 
     spark = batch_docs.sparkSession
     id_col = batch_docs.columns[0]
+    parts_dir = os.path.join(index_path, "parts")
+    bands_dir = os.path.join(parts_dir, "_kind=bands")
+    sigs_dir = os.path.join(parts_dir, "_kind=sigs")
+    for legacy in ("bands", "sigs"):
+        if os.path.exists(os.path.join(index_path, legacy)):
+            raise ValueError(
+                f"near-dup index {index_path!r} has the legacy layout "
+                f"({os.path.join(index_path, legacy)!r}); this ingest reads "
+                f"{parts_dir!r} and would treat the index as empty. "
+                "Rebuild the index by re-ingesting its table."
+            )
 
     # 1. in-batch exact dedup (min key per fingerprint)
     deduped = (
@@ -217,9 +227,6 @@ def ingest_batch_neardup(
     # per-batch index update is a single write job (was two writes of the
     # same checkpointed frame); readers scan one role's subdir with the
     # other role's null columns pruned at the columnar scan.
-    parts_dir = os.path.join(index_path, "parts")
-    bands_dir = os.path.join(parts_dir, "_kind=bands")
-    sigs_dir = os.path.join(parts_dir, "_kind=sigs")
     if os.path.exists(bands_dir):
         batch_bands = all_bands.join(losers, id_col, "left_anti").select(
             "fingerprint", "_sig", "band", "bhash"

@@ -184,3 +184,34 @@ def test_neardup_streaming_ingest_end_to_end(spark, sf_smoke, tmp_path):
     # near-dup pairs the corpus happens to contain
     assert got.count() == got.select("text").distinct().count()
     assert got.count() > 0
+
+
+def test_neardup_ingest_refuses_legacy_index_layout(spark, sf_smoke, tmp_path):
+    """An index in the older ``<index>/bands`` + ``<index>/sigs`` layout
+    must be refused, naming the legacy path: read as "no history" it would
+    re-admit every near-duplicate of the documents it records."""
+    import os
+
+    import pytest
+
+    from fxa_amplitude_send_spark.streaming.corpus_ingest import ingest_batch_neardup
+
+    docs = _docs(spark, sf_smoke)
+    table, index = str(tmp_path / "corpus"), str(tmp_path / "index")
+    b1 = docs.filter("doc_id < 50")
+    assert ingest_batch_neardup(b1, table, index, "t-1") > 0
+    n1 = read_snapshot(spark, table).count()
+
+    # rewrite the index into the legacy two-directory layout
+    parts = os.path.join(index, "parts")
+    legacy = str(tmp_path / "legacy")
+    spark.read.parquet(os.path.join(parts, "_kind=bands")).select(
+        "fingerprint", "band", "bhash"
+    ).write.parquet(os.path.join(legacy, "bands"))
+    spark.read.parquet(os.path.join(parts, "_kind=sigs")).select(
+        "fingerprint", "sig"
+    ).write.parquet(os.path.join(legacy, "sigs"))
+
+    with pytest.raises(ValueError, match="legacy layout.*bands"):
+        ingest_batch_neardup(b1, table, legacy, "t-2")
+    assert read_snapshot(spark, table).count() == n1  # nothing re-admitted

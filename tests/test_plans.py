@@ -437,8 +437,8 @@ def test_no_cartesian_product_in_any_registered_query(spark, sf_smoke):
     # minutes of driver-idle tail. Independent queries overlap fine inside
     # one SparkSession (guide §2.6): a small thread pool keeps the
     # scheduler busy and cuts the audit's wall clock several-fold. Each
-    # gate writes under its own _work_root tag, so concurrent builders
-    # never collide.
+    # gate writes under its own per-thread staging.scratch dir, so
+    # concurrent gates never collide.
     from concurrent.futures import ThreadPoolExecutor
 
     # NOT physical_plan(): that captures explain() via redirect_stdout,
@@ -724,45 +724,33 @@ def test_q18_bucketed_having_aggregate_is_exchange_free(spark, sf_smoke):
     assert plan.count("BroadcastHashJoin") >= 2, plan
 
 
-def test_ensure_bucketed_reregisters_existing_files_without_rewrite(
-    spark, sf_smoke, tmp_path
-):
-    """The write-amortization contract across PROCESSES: when the bucketed
-    files already exist (committer _SUCCESS present) but the session
-    catalog is fresh — a new process — ensure_bucketed must re-register
-    the layout over the existing files instead of rewriting them, and the
-    re-registered table must still plan bucket-aligned."""
+def test_ensure_bucketed_second_call_reuses_files_in_app(spark, sf_smoke, tmp_path):
+    """The write-amortization contract within one Spark application: a
+    second ensure_bucketed call with the same (table, key, sig) reuses the
+    staged files without rewriting them, and the table it returns still
+    plans bucket-aligned."""
     import glob
     import os
+    import re
+    from urllib.parse import urlparse
 
     from fxa_amplitude_send_spark.sinks.bucketed import ensure_bucketed
     from fxa_amplitude_send_spark.sources import load_table
 
     ev = load_table(spark, sf_smoke, "events").select("user_id", "value")
-    sig = f"rereg-test-{os.path.basename(str(tmp_path))}"
-    t1 = ensure_bucketed(spark, ev, "ev_rereg", "user_id", sig=sig)
-    loc = [
-        f for f in glob.glob("/tmp/fxa_spark_bucketed_ev_rereg_*")
-        if os.path.exists(os.path.join(f, "_SUCCESS"))
-    ]
-    assert loc, "bucketed write left no _SUCCESS-marked location"
-    name = os.path.basename(loc[0]).replace("fxa_spark_bucketed_", "")
-    mtimes = {
-        f: os.path.getmtime(f) for f in glob.glob(os.path.join(loc[0], "*"))
-    }
+    sig = f"reuse-test-{os.path.basename(str(tmp_path))}"
+    t1 = ensure_bucketed(spark, ev, "ev_reuse", "user_id", sig=sig)
+    (loc,) = {os.path.dirname(urlparse(f).path) for f in t1.inputFiles()}
+    assert os.path.basename(loc).startswith("fxa_spark_bucketed_"), loc
+    stamps = {f: os.stat(f).st_mtime_ns for f in glob.glob(os.path.join(loc, "*"))}
     n1 = t1.count()
 
-    spark.sql(f"DROP TABLE {name}")  # simulate a fresh process's catalog
-    t2 = ensure_bucketed(spark, ev, "ev_rereg", "user_id", sig=sig)
+    t2 = ensure_bucketed(spark, ev, "ev_reuse", "user_id", sig=sig)
+    assert {os.path.dirname(urlparse(f).path) for f in t2.inputFiles()} == {loc}
     assert t2.count() == n1
     assert {
-        f: os.path.getmtime(f) for f in glob.glob(os.path.join(loc[0], "*"))
-    } == mtimes, "re-registration must not rewrite the bucketed files"
-    plan = physical_plan(
-        t2.groupBy("user_id").agg({"value": "sum"})
-    )
+        f: os.stat(f).st_mtime_ns for f in glob.glob(os.path.join(loc, "*"))
+    } == stamps, "a second call in the same application must not rewrite"
+    plan = physical_plan(t2.groupBy("user_id").agg({"value": "sum"}))
     assert "SelectedBucketsCount" in plan or "Bucketed: true" in plan
-    import re
-
     assert not re.search(r"Exchange hashpartitioning\(user_id", plan), plan
-    spark.sql(f"DROP TABLE {name}")

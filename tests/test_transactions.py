@@ -609,3 +609,21 @@ def test_staged_changes_are_table_columns_plus_change_type(spark, tmp_path, case
     cdf = txn.staged_changes(a, spark)
     assert cdf.columns == ["k", "v", "_change_type"]
     assert sorted(tuple(r) for r in cdf.collect()) == want
+
+
+def test_stream_cdc_merge_names_an_empty_cdc_batch(spark, sf_smoke, tmp_path):
+    """q_stream_txn_merge stages four CDC batches from events; at a small
+    SF the ``event_id % 8 == 4`` update batch can select no rows, which
+    used to surface as a bare FileNotFoundError from the missing ``_b=3``
+    partition dir. It must be a ValueError naming the empty batch."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from fxa_amplitude_send_spark.plans import all_queries
+
+    events = pq.read_table(os.path.join(sf_smoke, "events.parquet"))
+    keep = pc.not_equal(pc.bit_wise_and(events["event_id"], 7), 4)
+    pq.write_table(events.filter(keep).slice(0, 200), str(tmp_path / "events.parquet"))
+
+    with pytest.raises(ValueError, match="CDC batch 3 is empty"):
+        all_queries()["q_stream_txn_merge"](spark, str(tmp_path))
